@@ -133,7 +133,7 @@ object GraphBuilder {
     bfsCache.getOrElseUpdate(System.identityHashCode(g).toString + "/" + k, {
       val landmarks = Iterative.topDegreeLandmarks(g, k)
         .collect().map(_.getLong(0)).toSeq
-      Materialize.table(Gx.multiSourceBfs(g, landmarks))
+      Gx.multiSourceBfsTable(g, landmarks)
     })
 
   // the double-sweep diameter estimate runs a far-vertex Pregel; both

@@ -616,13 +616,92 @@ object Gx {
       .select(col("id"), round(col("q") / 1e6, 6).as("eigenvector"))
   }
 
-  /** Multi-source BFS: exact hop distances from each landmark. Vertex
-    * state is a fixed Array[Int] of per-landmark distances (k slots),
-    * merged element-wise — ONE Pregel run covers all landmarks, and a
-    * vertex only re-activates when some slot improves. Returns
-    * (landmark, v, dist), identical to [[Iterative.multiSourceBfs]]
-    * (which capped at 30 rounds; Pregel runs to quiescence). */
-  def multiSourceBfs(g: Graph, landmarks: Seq[Long]): DataFrame = {
+  /** Multi-source BFS: exact hop distances from each landmark, as
+    * (landmark, v, dist) rows for every reachable v — identical to
+    * [[Iterative.multiSourceBfs]] (which capped at 30 rounds; both
+    * branches here run to quiescence). A landmark without an edge, or
+    * not in the graph, contributes no row; duplicate landmarks count
+    * once.
+    *
+    * Two regimes, split at [[Graph.broadcastVertexGate]]:
+    *  - at or below it, ONE source-parallel Spark job: the landmarks
+    *    are split across tasks and each task runs a queue BFS per
+    *    landmark over the graph's broadcast [[Graph.csr]] with dense
+    *    per-task arrays (O(|V|) ints) — no job per BFS level;
+    *  - above it (the 100 TB branch), one Pregel run whose vertex state
+    *    is a k-slot Int array, merged element-wise; a vertex re-activates
+    *    only when some slot improves. Its output is materialized, and
+    *    the Pregel graphs are then unpersisted ([[releasingState]]) —
+    *    this branch returns a cached leaf. */
+  def multiSourceBfs(g: Graph, landmarks: Seq[Long]): DataFrame =
+    if (belowGate(g)) csrBfs(g, landmarks) else pregelBfs(g, landmarks)._1
+
+  /** [[multiSourceBfs]] as a materialized leaf, for the session memos
+    * (one cached copy on either side of the gate). */
+  private[graph] def multiSourceBfsTable(g: Graph, landmarks: Seq[Long]): DataFrame =
+    if (belowGate(g)) graft.Materialize.table(csrBfs(g, landmarks))
+    else pregelBfs(g, landmarks)._1
+
+  private[graph] def belowGate(g: Graph): Boolean =
+    g.vertexCount <= Graph.broadcastVertexGate
+
+  /** One Spark job over `sources`, split across at most one task per
+    * core; each task runs `f` over the broadcast CSR. */
+  private[graph] def sourceParallel[T: scala.reflect.ClassTag](
+      g: Graph, sources: Seq[Long])(
+      f: (Csr, Iterator[Long]) => Iterator[T]): org.apache.spark.rdd.RDD[T] = {
+    val bc = g.csr
+    val sc = g.edges.sparkSession.sparkContext
+    val slices = math.max(1, math.min(sources.size, sc.defaultParallelism))
+    sc.parallelize(sources, slices).mapPartitions(it => f(bc.value, it))
+  }
+
+  /** Runs a GraphX traversal and frees everything it left persisted.
+    * `traverse` runs the supersteps; every RDD persisted meanwhile is
+    * traversal state. `materialize` turns that state into the caller's
+    * persisted outputs, which are kept; the state is unpersisted once
+    * they exist. Callers build [[of]] first (the shared base is memoized
+    * per graph and must survive), and graft runs one query at a time
+    * per SparkContext, so nothing else persists in between. */
+  private[graph] def releasingState[S, A](sc: org.apache.spark.SparkContext)(
+      traverse: => S)(materialize: S => A): A = {
+    val before = sc.getPersistentRDDs.keySet
+    val state = traverse
+    val scratch = sc.getPersistentRDDs.collect {
+      case (id, rdd) if !before(id) => rdd
+    }.toList
+    val out = materialize(state)
+    scratch.foreach(_.unpersist(blocking = false))
+    out
+  }
+
+  private def csrBfs(g: Graph, landmarks: Seq[Long]): DataFrame = {
+    val spark = g.edges.sparkSession
+    import spark.implicits._
+    sourceParallel(g, landmarks.distinct) { (c, it) =>
+      val dist = Array.fill(c.size)(-1)
+      val order = new Array[Int](c.size)
+      it.flatMap { lm =>
+        val s = c.indexOf(lm)
+        if (s < 0) Iterator.empty
+        else {
+          val reached = Csr.bfs(c, s, dist, order)
+          val out = new Array[(Long, Long, Int)](reached)
+          var j = 0
+          while (j < reached) {
+            val v = order(j)
+            out(j) = (lm, c.ids(v), dist(v))
+            dist(v) = -1
+            j += 1
+          }
+          out.iterator
+        }
+      }
+    }.toDF("landmark", "v", "dist")
+  }
+
+  /** The above-gate Pregel BFS: (materialized leaf, its cache handle). */
+  private def pregelBfs(g: Graph, landmarks: Seq[Long]): (DataFrame, DataFrame) = {
     val spark = g.edges.sparkSession
     import spark.implicits._
     val k = landmarks.size
@@ -649,34 +728,38 @@ object Gx {
       if (any) out else null
     }
 
-    val init = of(g).mapVertices { (id, _) =>
-      val a = Array.fill(k)(Inf)
-      slot.get(id).foreach(s => a(s) = 0)
-      a
-    }
-    val res = Pregel(init, Array.fill(k)(Inf),
-      activeDirection = EdgeDirection.Either)(
-      (_, attr, msg) => merged(attr, msg),
-      triplet => {
-        val toDst = improvement(triplet.srcAttr, triplet.dstAttr)
-        val toSrc = improvement(triplet.dstAttr, triplet.srcAttr)
-        (if (toDst != null) Iterator((triplet.dstId, toDst)) else Iterator.empty) ++
-          (if (toSrc != null) Iterator((triplet.srcId, toSrc)) else Iterator.empty)
-      },
-      merged)
-    val lm = landmarks.toArray
-    res.vertices.flatMap { case (v, dists) =>
-      dists.iterator.zipWithIndex.collect {
-        case (d, i) if d != Inf => (lm(i), v, d)
+    val xg = of(g)
+    releasingState(spark.sparkContext) {
+      val init = xg.mapVertices { (id, _) =>
+        val a = Array.fill(k)(Inf)
+        slot.get(id).foreach(s => a(s) = 0)
+        a
       }
-    }.toDF("landmark", "v", "dist")
+      Pregel(init, Array.fill(k)(Inf),
+        activeDirection = EdgeDirection.Either)(
+        (_, attr, msg) => merged(attr, msg),
+        triplet => {
+          val toDst = improvement(triplet.srcAttr, triplet.dstAttr)
+          val toSrc = improvement(triplet.dstAttr, triplet.srcAttr)
+          (if (toDst != null) Iterator((triplet.dstId, toDst)) else Iterator.empty) ++
+            (if (toSrc != null) Iterator((triplet.srcId, toSrc)) else Iterator.empty)
+        },
+        merged)
+    } { res =>
+      val lm = landmarks.toArray
+      graft.Materialize.tableWithHandle(res.vertices.flatMap { case (v, dists) =>
+        dists.iterator.zipWithIndex.collect {
+          case (d, i) if d != Inf => (lm(i), v, d)
+        }
+      }.toDF("landmark", "v", "dist"))
+    }
   }
 
   /** GraphFrames `shortestPaths` parity: per-vertex map of
     * landmark → hop distance (only reachable landmarks appear, matching
     * GraphFrames; unreachable vertices carry an empty map). One
-    * array-state Pregel serves all landmarks ([[multiSourceBfs]]); the
-    * pivot to map form is a per-vertex collect_list — bounded by k. */
+    * [[multiSourceBfs]] serves all landmarks; the pivot to map form is
+    * a per-vertex collect_list — bounded by k. */
   def shortestPaths(g: Graph, landmarks: Seq[Long]): DataFrame = {
     val dists = multiSourceBfs(g, landmarks)
       .groupBy(col("v").as("id"))
@@ -696,11 +779,13 @@ object Gx {
     * 100 TB choice), and this is the traversal family's exact opt-in,
     * mirroring [[GxBetweenness.exact]] next to the sampled default.
     *
-    * Sources run in `batchSize`-wide slices of the one array-state
-    * Pregel ([[multiSourceBfs]]): per slice the vertex state is a
-    * batch-wide Int array, so memory is O(n·batch), never O(n²); total
-    * work is O(n/batch) quiescent Pregel runs = O(n·|E|) — the
-    * irreducible cost of exactness, which is WHY it is opt-in. The
+    * Sources run in `batchSize`-wide slices of [[multiSourceBfs]]:
+    * below the vertex gate each slice is a set of source-parallel CSR
+    * tasks with O(|V|) arrays each (the slices' unions run as one job);
+    * above it each slice is a Pregel whose vertex state is a
+    * batch-wide Int array, so memory is O(n·batch), never O(n²). Total
+    * work is O(n·|E|) either way — the irreducible cost of exactness,
+    * which is WHY it is opt-in. The
     * source ids STREAM to the driver partition-by-partition
     * (`toLocalIterator` over the range-sorted id column): the driver
     * holds one partition of ids plus the current batch, never the full
@@ -1027,14 +1112,24 @@ object Gx {
     val lm1 = Iterative.topDegreeLandmarks(g, 1).head().getLong(0)
     // sweep 1 reuses the session-cached 8-landmark BFS: landmark #1 IS
     // the top-degree vertex (same (degree desc, id) ordering), so a
-    // fresh single-source Pregel here would recompute distances the
+    // fresh single-source BFS here would recompute distances the
     // bfs/closeness/avg-path queries already materialized
     val first = GraphBuilder.landmarkBfs(g, 8)
       .filter(col("landmark") === lm1)
     val far = first.orderBy(col("dist").desc, col("v").asc).limit(1)
       .head().getLong(1)
-    multiSourceBfs(g, Seq(far))
-      .agg(max("dist").as("diameter_lower_bound"))
+    if (belowGate(g))
+      csrBfs(g, Seq(far)).agg(max("dist").as("diameter_lower_bound"))
+    else {
+      // the Pregel branch's far-vertex table is only read by this max:
+      // compute the one row, then free the table
+      val (table, handle) = pregelBfs(g, Seq(far))
+      val out = table.agg(max("dist").as("diameter_lower_bound"))
+      val rows = out.collect()
+      handle.unpersist(blocking = false)
+      g.edges.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), out.schema)
+    }
   }
 
   /** Per-triplet MD5 coin for the independent-cascade family — the

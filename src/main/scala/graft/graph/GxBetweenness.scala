@@ -4,18 +4,21 @@ import org.apache.spark.graphx.{EdgeDirection, Pregel, VertexRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** GraphX Brandes betweenness from k seeded-uniform sources — same
-  * estimator as [[Betweenness]] (Brandes–Pich n/k extrapolation, each
-  * unordered pair counted once) without the per-iteration DataFrame
-  * planning cost.
+/** Brandes betweenness from k seeded-uniform sources — same estimator
+  * as [[Betweenness]] (Brandes–Pich n/k extrapolation, each unordered
+  * pair counted once) without the per-iteration DataFrame planning
+  * cost. Two regimes, split at [[Graph.broadcastVertexGate]]:
   *
-  * Forward: one Pregel run carrying all k (dist, sigma) slots — BFS
-  * waves arrive level-synchronously, so the first wave fixes dist and
-  * the merged same-round messages fix sigma (# shortest paths).
-  * Backward: level-synchronous dependency accumulation δ(v) =
-  * Σ_w σ(v)/σ(w)·(1+δ(w)) over successors w, one aggregateMessages per
-  * level from the deepest frontier upward — diameter rounds total, all
-  * sources simultaneously.
+  *  - at or below it, ONE source-parallel Spark job over the graph's
+  *    broadcast CSR ([[csrSweep]]): sources are split across tasks,
+  *    each task runs textbook per-source Brandes with dense arrays and
+  *    ships its sums in chunks;
+  *  - above it (the 100 TB branch), GraphX Pregel ([[pregelSweep]]):
+  *    one forward run carrying all k (dist, sigma) slots, then one
+  *    aggregateMessages per BFS level from the deepest frontier upward.
+  *
+  * Both keep the same fixed-point arithmetic, so their outputs are
+  * bit-identical to each other and to the DuckDB oracle.
   */
 object GxBetweenness {
 
@@ -23,10 +26,11 @@ object GxBetweenness {
     * (the reference computes exact on the driver, main.py:151-155; the
     * estimator stays the production default because exact is Θ(|V|·|E|)
     * work and Θ(|V|) per-vertex state). With all sources the n/k
-    * extrapolation factor is 1, so this is textbook Brandes: the
-    * per-vertex (dist, sigma) slot arrays are |V| wide — opt in only at
-    * reference scale (≲ tens of thousands of vertices), where the
-    * quadratic state still fits executor memory. */
+    * extrapolation factor is 1, so this is textbook Brandes. Below the
+    * vertex gate that is |V| sources over the CSR, O(|V|+|E|) state per
+    * task; the Pregel branch's per-vertex (dist, sigma) slot arrays are
+    * |V| wide — opt in only at reference scale (≲ tens of thousands of
+    * vertices), where the quadratic state still fits executor memory. */
   def exact(g: Graph, seed: Long = 42L): DataFrame = {
     val n = g.vertexCount
     require(n <= 100000,
@@ -42,13 +46,14 @@ object GxBetweenness {
     * Girvan–Newman splitting criterion), same seeded Brandes estimator:
     * the backward sweep's per-edge term σv/σw·(1+δw) IS the edge
     * dependency, so the edge variant collects exactly what the vertex
-    * accumulation already routes — one extra triplets pass per level,
-    * same fixed-point micro-longs, same n/k extrapolation. */
+    * accumulation already routes (per arc on the CSR, one extra
+    * triplets pass per level on Pregel) — same fixed-point
+    * micro-longs, same n/k extrapolation. */
   def edgeRun(g: Graph, numSources: Int = 8, seed: Long = 42L): DataFrame =
     sweep(g, numSources, seed)._2
 
   // ONE sweep serves both rankings (r9): vertex and edge betweenness
-  // share the forward (dist, sigma) Pregel and the entire backward
+  // share the forward (dist, sigma) pass and the entire backward
   // dependency recursion — r8 ran the full sweep twice (2.0 s + 5.9 s
   // at sf0.1); the edge variant's extra per-level triplets pass is the
   // only marginal cost, which is why the edge table is computed
@@ -107,18 +112,189 @@ object GxBetweenness {
 
   private def computeSweep(g: Graph, numSources: Int,
                            seed: Long): SweepTables = {
-    val Inf = Int.MaxValue // local: closures must not capture the module
     val spark = g.edges.sparkSession
     import spark.implicits._
-    val n = g.vertices.count()
+    val n = g.vertexCount
     // md5-ordered uniform sample — engine-portable source selection,
     // same ordering as Betweenness.run and the DuckDB oracle
     val sources = g.vertices
       .orderBy(md5(concat_ws(":", col("id"), lit(seed))), col("id"))
       .limit(numSources).select("id").as[Long].collect().toSeq
     val k = math.min(numSources.toLong, n)
-    val slot = sources.zipWithIndex.toMap
 
+    // (dep: id → Σ_s δ_s(v) micro-longs, eb: canonical edge → Σ_s edge
+    // dependency micro-longs) → the two persisted output tables
+    def tables(deps: (DataFrame, DataFrame)): SweepTables = {
+      val (dep, eb) = deps
+      // canonicalize defensively: co-purchase edges are src<dst by
+      // construction, but Graph accepts any orientation
+      val edgeOut = g.edges
+        .select(least(col("src"), col("dst")).as("src"),
+          greatest(col("src"), col("dst")).as("dst"))
+        .join(eb, Seq("src", "dst"), "left")
+        .na.fill(0L, Seq("depmicro"))
+        .select(col("src"), col("dst"),
+          ((col("depmicro") * lit(n)).cast("double") / lit(k * 2.0 * 1.0e9))
+            .as("edge_betweenness"))
+      val (edgeHandle, edgeTable) = matKeep(edgeOut)
+      // no final round(): see Betweenness.run — the exact rational
+      // depMicro·n/(k·2·1e9) is bit-identical across engines, a decimal
+      // rounding of micro-grid values is not (.5-tie divergence)
+      val (vtxHandle, vtxTable) = matKeep(
+        g.vertices.select("id")
+          .join(dep, Seq("id"), "left")
+          .na.fill(0L, Seq("dep"))
+          .select(col("id"),
+            ((col("dep") * lit(n)).cast("double") / lit(k * 2.0 * 1.0e9))
+              .as("betweenness")))
+      SweepTables(vtxHandle, edgeHandle, vtxTable, edgeTable)
+    }
+
+    if (Gx.belowGate(g)) tables(csrSweep(g, sources))
+    else {
+      Gx.of(g) // the shared base outlives the sweep's released state
+      Gx.releasingState(spark.sparkContext)(pregelSweep(g, sources))(tables)
+    }
+  }
+
+  /** Below the vertex gate: ONE source-parallel job over the graph's
+    * broadcast [[Graph.csr]]. Each task runs textbook Brandes per
+    * source — a queue BFS for dist, σ in BFS order, δ in reverse BFS
+    * order — with the Pregel branch's exact arithmetic (σ an
+    * integer-valued double, each dependency term
+    * floor(σv/σw·(1e9+δw)+0.5) a long, δ and the per-arc terms integer
+    * sums), so both branches and the DuckDB oracle agree bit for bit.
+    * Per-task state is O(|V|+|E|) dense arrays; the per-vertex and
+    * per-arc sums leave each task as fixed-size arrays keyed by chunk,
+    * summed by one reduceByKey, and only then become rows. */
+  private def csrSweep(g: Graph, sources: Seq[Long]): (DataFrame, DataFrame) = {
+    val spark = g.edges.sparkSession
+    import spark.implicits._
+    val bc = g.csr
+    // dense per-task accumulators leave a task in chunks of this many
+    // longs, summed per chunk across tasks — never one tuple per arc
+    val chunk = 8192
+    val vChunks = (bc.value.size + chunk - 1) / chunk
+    val partials = Gx.sourceParallel(g, sources.distinct) { (c, it) =>
+      val nv = c.size
+      val dist = Array.fill(nv)(-1)
+      val order = new Array[Int](nv)
+      val sigma = new Array[Double](nv)
+      val delta = new Array[Long](nv)
+      val vdep = new Array[Long](nv)
+      val adep = new Array[Long](c.arcs)
+      it.foreach { id =>
+        val s = c.indexOf(id)
+        if (s >= 0) {
+          val reached = Csr.bfs(c, s, dist, order)
+          // σ: every parent precedes its children in BFS order, and
+          // parallel arcs each carry a path (the GraphX multigraph)
+          sigma(s) = 1.0
+          var j = 0
+          while (j < reached) {
+            val v = order(j)
+            val dv = dist(v) + 1
+            var a = c.offsets(v)
+            while (a < c.offsets(v + 1)) {
+              val w = c.nbrs(a)
+              if (dist(w) == dv) sigma(w) += sigma(v)
+              a += 1
+            }
+            j += 1
+          }
+          // δ: successors before predecessors; the source (order(0))
+          // only receives, and its own δ is excluded (pairs s ≠ v)
+          j = reached - 1
+          while (j > 0) {
+            val w = order(j)
+            val pd = dist(w) - 1
+            val sw = sigma(w)
+            val dw = delta(w)
+            var a = c.offsets(w)
+            while (a < c.offsets(w + 1)) {
+              val v = c.nbrs(a)
+              if (dist(v) == pd) {
+                val t = math.floor(sigma(v) / sw * (1.0e9 + dw) + 0.5).toLong
+                delta(v) += t
+                adep(a) += t
+              }
+              a += 1
+            }
+            vdep(w) += dw
+            j -= 1
+          }
+          j = 0
+          while (j < reached) {
+            val v = order(j)
+            dist(v) = -1; sigma(v) = 0.0; delta(v) = 0L
+            j += 1
+          }
+        }
+      }
+      // fold every arc's sum onto its edge's canonical arc: the first
+      // lo→hi arc (index order = id order, so lo < hi in ids too)
+      var u = 0
+      while (u < nv) {
+        var a = c.offsets(u)
+        while (a < c.offsets(u + 1)) {
+          val v = c.nbrs(a)
+          if (adep(a) != 0L && v != u) {
+            val t = if (u < v) c.firstArc(u, v) else c.firstArc(v, u)
+            if (t != a) { adep(t) += adep(a); adep(a) = 0L }
+          }
+          a += 1
+        }
+        u += 1
+      }
+      def chunks(arr: Array[Long], key0: Int): Iterator[(Int, Array[Long])] =
+        Iterator.range(0, (arr.length + chunk - 1) / chunk).flatMap { i =>
+          val part = java.util.Arrays.copyOfRange(
+            arr, i * chunk, math.min(arr.length, (i + 1) * chunk))
+          if (part.exists(_ != 0L)) Iterator((key0 + i, part)) else Iterator.empty
+        }
+      chunks(vdep, 0) ++ chunks(adep, vChunks)
+    }
+    val sums = partials.reduceByKey({ (a, b) =>
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }, partials.getNumPartitions)
+    // both tables read the one shuffle: the second action reuses its
+    // map output instead of re-running the sweep
+    val dep = sums.filter(_._1 < vChunks).flatMap { case (key, part) =>
+      val c = bc.value
+      val base = key * chunk
+      part.iterator.zipWithIndex.collect {
+        case (d, i) if d != 0L => (c.ids(base + i), d)
+      }
+    }
+    val eb = sums.filter(_._1 >= vChunks).flatMap { case (key, part) =>
+      val c = bc.value
+      val base = (key - vChunks) * chunk
+      part.iterator.zipWithIndex.collect {
+        case (m, i) if m != 0L =>
+          val a = base + i
+          (c.ids(c.arcSource(a)), c.ids(c.nbrs(a)), m)
+      }
+    }
+    (dep.toDF("id", "dep"), eb.toDF("src", "dst", "depmicro"))
+  }
+
+  /** Above the vertex gate (the 100 TB branch): the Pregel sweep.
+    *
+    * Forward: one Pregel run carrying all k (dist, sigma) slots — BFS
+    * waves arrive level-synchronously, so the first wave fixes dist and
+    * the merged same-round messages fix sigma (# shortest paths).
+    * Backward: level-synchronous dependency accumulation δ(v) =
+    * Σ_w σ(v)/σ(w)·(1+δ(w)) over successors w, one aggregateMessages per
+    * level from the deepest frontier upward — diameter rounds total, all
+    * sources simultaneously. Everything it persists is traversal state
+    * that [[computeSweep]] releases once the output tables exist. */
+  private def pregelSweep(g: Graph, sources: Seq[Long]): (DataFrame, DataFrame) = {
+    val Inf = Int.MaxValue // local: closures must not capture the module
+    val spark = g.edges.sparkSession
+    import spark.implicits._
+    val slot = sources.zipWithIndex.toMap
     // ---- forward sweep: per-slot (dist, sigma) ----
     final case class DS(dist: Array[Int], sigma: Array[Double])
     def mergeMsg(a: DS, b: DS): DS = {
@@ -303,19 +479,6 @@ object GxBetweenness {
     val eb = all.reduceByKey(_ + _)
       .map { case ((lo, hi), m) => (lo, hi, m) }
       .toDF("src", "dst", "depmicro")
-    // canonicalize defensively: co-purchase edges are src<dst by
-    // construction, but Graph accepts any orientation
-    val edgeOut = g.edges
-      .select(least(col("src"), col("dst")).as("src"),
-        greatest(col("src"), col("dst")).as("dst"))
-      .join(eb, Seq("src", "dst"), "left")
-      .na.fill(0L, Seq("depmicro"))
-      .select(col("src"), col("dst"),
-        ((col("depmicro") * lit(n)).cast("double") / lit(k * 2.0 * 1.0e9))
-          .as("edge_betweenness"))
-    val (edgeHandle, edgeTable) = matKeep(edgeOut)
-    edgeLevels.foreach(_.unpersist(blocking = false))
-
     val srcArr = sources.toArray
     val dep = forward.vertices.leftJoin(delta) { (id, ds, dOpt) =>
       val d = dOpt.getOrElse(new Array[Long](sources.size))
@@ -328,22 +491,6 @@ object GxBetweenness {
       }
       sum
     }.map { case (id, s) => (id, s) }.toDF("id", "dep")
-
-    // no final round(): see Betweenness.run — the exact rational
-    // depMicro·n/(k·2·1e9) is bit-identical across engines, a decimal
-    // rounding of micro-grid values is not (.5-tie divergence)
-    val (vtxHandle, vtxTable) = matKeep(
-      g.vertices.select("id")
-        .join(dep, Seq("id"), "left")
-        .na.fill(0L, Seq("dep"))
-        .select(col("id"),
-          ((col("dep") * lit(n)).cast("double") / lit(k * 2.0 * 1.0e9))
-            .as("betweenness")))
-    // both outputs are materialized leaves now — the sweep's vertex
-    // state can go. Edges stay: forward shares the session-cached
-    // Gx.of(g) edge partitions (Pregel only rewrites vertices).
-    delta.unpersist(blocking = false)
-    forward.unpersistVertices(blocking = false)
-    SweepTables(vtxHandle, edgeHandle, vtxTable, edgeTable)
+    (dep, eb)
   }
 }

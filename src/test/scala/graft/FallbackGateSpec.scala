@@ -12,16 +12,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * stream plan (row exchange + pre-partitioned aggregate), the
   * clique4 SHUFFLE-join (no adjacency broadcast), the shuffle-join
   * oriented/intersection pipeline under both, and the no-broadcast
-  * triangle-estimate plan. Fresh Graph instances per side so the
+  * triangle-estimate plan, and the GraphX Pregel traversals (multi-
+  * source BFS, diameter double sweep, shortest paths, the Brandes
+  * sweep) in place of the broadcast-CSR kernels. Fresh Graph instances
+  * per side so the
   * lazy-val caches can't leak plans across gate settings; tests run
   * sequentially in the forked test JVM, so the var flip is safe. */
 class FallbackGateSpec extends AnyFunSuite {
   import SparkTestSession._
-  import graft.graph.{Graph, GraphBuilder, GraphQueries}
+  import graft.graph.{Graph, GraphBuilder, GraphQueries, Gx, GxBetweenness, Iterative}
 
+  // new frames, not just a new Graph: the Brandes sweep memo keys on
+  // the Graph value, whose equality is its frames' identity
   private def freshGraph(): Graph = {
     val g = GraphBuilder.coPurchase(spark, sf)
-    Graph(g.vertices, g.edges)
+    Graph(g.vertices.select("*"), g.edges.select("*"))
   }
 
   private def withGate[A](gate: Long)(f: => A): A = {
@@ -79,5 +84,82 @@ class FallbackGateSpec extends AnyFunSuite {
     val wide = withGate(0L)(run())
     assert(small == wide, "core numbers diverge between join branches")
     assert(small.values.max > 1L, "degenerate graph: max coreness <= 1")
+  }
+
+  private def landmarks(g: Graph): Seq[Long] =
+    Iterative.topDegreeLandmarks(g, 8).collect().map(_.getLong(0)).toSeq
+
+  test("betweenness: Pregel sweep equals the CSR kernel exactly") {
+    def run(): (Map[Long, Double], Map[(Long, Long), Double]) = {
+      val g = freshGraph()
+      (GxBetweenness.run(g, numSources = 8).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap,
+        GxBetweenness.edgeRun(g, numSources = 8).collect()
+          .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap)
+    }
+    val (smallV, smallE) = withGate(Long.MaxValue)(run())
+    val (wideV, wideE) = withGate(0L)(run())
+    // bit-identical doubles: both branches sum the same micro-longs
+    assert(smallV == wideV, "vertex betweenness diverges between branches")
+    assert(smallE == wideE, "edge betweenness diverges between branches")
+    assert(smallV.values.exists(_ > 0.0) && smallE.values.exists(_ > 0.0))
+  }
+
+  test("multi-source BFS, shortest paths, diameter: Pregel equals CSR") {
+    def run() = {
+      val g = freshGraph()
+      val lm = landmarks(g)
+      (Gx.multiSourceBfs(g, lm).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet,
+        Gx.shortestPaths(g, lm.take(3)).collect()
+          .map(r => r.getLong(0) -> r.getMap[Long, Int](1).toMap).toMap,
+        Gx.diameterEstimate(g).head().getInt(0))
+    }
+    val small = withGate(Long.MaxValue)(run())
+    val wide = withGate(0L)(run())
+    assert(small._1 == wide._1, "multi-source BFS diverges")
+    assert(small._2 == wide._2, "shortest paths diverge")
+    assert(small._3 == wide._3, "diameter estimate diverges")
+    assert(small._1.map(_._1).size == 8 && small._3 > 1)
+  }
+
+  test("Pregel branches free their traversal state, keep only outputs") {
+    // before: the Pregel result graphs stayed cached for the session —
+    // 1 EdgeRDD + 2 VertexRDDs per multi-source BFS, 4 EdgeRDDs + 1
+    // VertexRDD per Brandes sweep (getRDDStorageInfo, gate 0)
+    val sc = spark.sparkContext
+    def added(before: Set[Int]): Seq[String] =
+      sc.getPersistentRDDs.toSeq.collect {
+        case (id, rdd) if !before(id) => Option(rdd.name).getOrElse("")
+      }
+    def graphX(names: Seq[String]): Seq[String] =
+      names.filter(n => n.startsWith("VertexRDD") || n.startsWith("EdgeRDD"))
+    withGate(0L) {
+      val g = freshGraph()
+      val lm = landmarks(g)
+      def persisted() = sc.getPersistentRDDs.keySet.toSet
+      val preBase = persisted()
+      Gx.of(g)
+      val base = persisted() -- preBase
+      var before = persisted()
+      Gx.multiSourceBfs(g, lm).count()
+      val bfs = added(before)
+      assert(graphX(bfs).isEmpty, s"BFS left GraphX state: $bfs")
+      assert(bfs.size == 1, s"expected the one output table: $bfs")
+      before = persisted()
+      GxBetweenness.run(g, numSources = 8).count()
+      GxBetweenness.edgeRun(g, numSources = 8).count()
+      val sweep = added(before)
+      assert(graphX(sweep).isEmpty, s"sweep left GraphX state: $sweep")
+      assert(sweep.size == 2, s"expected the two output tables: $sweep")
+      before = persisted()
+      Gx.diameterEstimate(g).head()
+      val diam = added(before)
+      // at most the landmark-BFS memo's one table; the far sweep is freed
+      assert(graphX(diam).isEmpty && diam.size <= 1, s"diameter left: $diam")
+      // the memoized GraphX base is shared and must survive
+      assert(base.nonEmpty && base.subsetOf(persisted()),
+        "Gx.of(g) base was freed")
+    }
   }
 }

@@ -374,6 +374,114 @@ class GxSpec extends AnyFunSuite {
       (10L, 10L, 0), (10L, 11L, 1)))
   }
 
+  /** Runs `f` on a fresh toy graph on each side of the vertex gate —
+    * the broadcast-CSR kernels, then the Pregel branch — and returns
+    * both results. Fresh frames per side: the sweep memo keys on them. */
+  private def bothBranches[A](edges: Seq[(Long, Long)],
+                              isolated: Seq[Long] = Nil)(f: Graph => A): (A, A) = {
+    def mk(): Graph = {
+      val e = edges.toDF("src", "dst")
+      val v = GraphBuilder.vertices(e).union(isolated.toDF("id"))
+      Graph(v, e)
+    }
+    val old = Graph.broadcastVertexGate
+    try {
+      Graph.broadcastVertexGate = Long.MaxValue
+      val csr = f(mk())
+      Graph.broadcastVertexGate = 0L
+      (csr, f(mk()))
+    } finally Graph.broadcastVertexGate = old
+  }
+
+  private def bfsSet(g: Graph, lm: Seq[Long]): Set[(Long, Long, Int)] =
+    Gx.multiSourceBfs(g, lm).as[(Long, Long, Int)].collect().toSet
+
+  private def btw(g: Graph, k: Int): Map[Long, Double] =
+    graph.GxBetweenness.run(g, numSources = k).as[(Long, Double)].collect().toMap
+
+  private def edgeBtw(g: Graph, k: Int): Seq[(Long, Long, Double)] =
+    graph.GxBetweenness.edgeRun(g, numSources = k)
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+
+  private def near(got: Map[Long, Double], want: Map[Long, Double]): Boolean =
+    got.keySet == want.keySet &&
+      want.forall { case (id, w) => math.abs(got(id) - w) <= 1e-6 }
+
+  test("toy graphs: isolated source or landmark, CSR == Pregel") {
+    val path = Seq((1L, 2L), (2L, 3L))
+    // landmark 4 has no edge and 99 is not a vertex: neither yields a row
+    val (a, b) = bothBranches(path, isolated = Seq(4L))(g => bfsSet(g, Seq(4L, 1L, 99L)))
+    assert(a == b)
+    assert(a == Set((1L, 1L, 0), (1L, 2L, 1), (1L, 3L, 2)))
+    // every vertex a source, the isolated one included: it scores 0
+    val (bc, bp) = bothBranches(path, isolated = Seq(4L))(btw(_, 4))
+    assert(bc == bp)
+    assert(near(bc, Map(1L -> 0.0, 2L -> 1.0, 3L -> 0.0, 4L -> 0.0)), s"$bc")
+  }
+
+  test("toy graphs: disconnected components, CSR == Pregel") {
+    val two = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L))
+    val (a, b) = bothBranches(two)(g => bfsSet(g, Seq(1L, 12L)))
+    assert(a == b)
+    assert(a == Set((1L, 1L, 0), (1L, 2L, 1), (1L, 3L, 2),
+      (12L, 12L, 0), (12L, 11L, 1), (12L, 10L, 2)))
+    val (bc, bp) = bothBranches(two)(btw(_, 6))
+    assert(bc == bp)
+    assert(near(bc, Map(1L -> 0.0, 2L -> 1.0, 3L -> 0.0,
+      10L -> 0.0, 11L -> 1.0, 12L -> 0.0)), s"$bc")
+    val (ec, ep) = bothBranches(two)(edgeBtw(_, 6))
+    assert(ec == ep)
+    assert(ec.forall(r => math.abs(r._3 - 2.0) <= 1e-6), s"$ec")
+  }
+
+  test("toy graphs: duplicate and reversed edges are parallel arcs") {
+    // 1–2 three times (twice as given, once reversed), then 2–3–4:
+    // every shortest path still runs the chain, split over the arcs
+    val multi = Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L))
+    val (a, b) = bothBranches(multi)(g => bfsSet(g, Seq(1L)))
+    assert(a == b && a == Set((1L, 1L, 0), (1L, 2L, 1), (1L, 3L, 2), (1L, 4L, 3)))
+    val (bc, bp) = bothBranches(multi)(btw(_, 4))
+    assert(bc == bp)
+    assert(near(bc, Map(1L -> 0.0, 2L -> 2.0, 3L -> 2.0, 4L -> 0.0)), s"$bc")
+    val (ec, ep) = bothBranches(multi)(edgeBtw(_, 4))
+    assert(ec == ep, "edge betweenness diverges on parallel arcs")
+    // one output row per input edge, each carrying its pair's total
+    assert(ec.size == multi.size)
+    val byPair = ec.map(r => (r._1, r._2) -> r._3).toMap
+    assert(byPair.keySet == Set((1L, 2L), (2L, 3L), (3L, 4L)))
+    Seq((1L, 2L) -> 3.0, (2L, 3L) -> 4.0, (3L, 4L) -> 3.0).foreach {
+      case (k, w) => assert(math.abs(byPair(k) - w) <= 1e-6, s"$k: ${byPair(k)}")
+    }
+  }
+
+  test("toy graphs: a self-loop changes no distance or dependency") {
+    val loop = Seq((1L, 1L), (1L, 2L), (2L, 3L))
+    val (a, b) = bothBranches(loop)(g => bfsSet(g, Seq(1L, 3L)))
+    assert(a == b && a == Set((1L, 1L, 0), (1L, 2L, 1), (1L, 3L, 2),
+      (3L, 3L, 0), (3L, 2L, 1), (3L, 1L, 2)))
+    val (bc, bp) = bothBranches(loop)(btw(_, 3))
+    assert(bc == bp)
+    assert(near(bc, Map(1L -> 0.0, 2L -> 1.0, 3L -> 0.0)), s"$bc")
+    val (ec, ep) = bothBranches(loop)(edgeBtw(_, 3))
+    assert(ec == ep)
+    assert(ec.find(r => r._1 == 1L && r._2 == 1L).exists(_._3 == 0.0))
+  }
+
+  test("toy graphs: numSources > |V| is exact Brandes; no landmarks, no rows") {
+    val path = Seq((1L, 2L), (2L, 3L))
+    val (bc, bp) = bothBranches(path)(btw(_, 10))
+    assert(bc == bp)
+    assert(near(bc, Map(1L -> 0.0, 2L -> 1.0, 3L -> 0.0)), s"$bc")
+    val (a, b) = bothBranches(path) { g =>
+      val d = Gx.multiSourceBfs(g, Nil)
+      (d.schema.fieldNames.toSeq, d.count(),
+        Gx.shortestPaths(g, Nil).as[(Long, Map[Long, Int])].collect().toMap)
+    }
+    assert(a == b)
+    assert(a._1 == Seq("landmark", "v", "dist") && a._2 == 0L)
+    assert(a._3 == Map(1L -> Map.empty, 2L -> Map.empty, 3L -> Map.empty))
+  }
+
   test("neighbor features match a local replay in exact cents") {
     val prices = graft.Tables(spark, sf).part
       .select("p_partkey", "p_retailprice").as[(Long, Double)]
