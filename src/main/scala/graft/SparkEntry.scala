@@ -1457,7 +1457,7 @@ object SparkEntry {
 
   /** Oracle for the FLAGSHIP seeded community-sample walk. The Spark
     * walk draws every choice from md5("seed:community:step") (see
-    * CommunitySample.portableChoice), so the whole sampler — LPA
+    * Csr.portableChoice), so the whole sampler — LPA
     * communities → intra-community clustering → walk lengths → the
     * step-by-step walk itself — reproduces in DuckDB: the walk is a
     * recursive CTE whose per-step choice is the same md5 arithmetic.

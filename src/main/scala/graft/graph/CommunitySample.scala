@@ -23,25 +23,19 @@ import scala.collection.mutable
   *     community's adjacency (the same memory assumption the reference
   *     makes), never the whole graph;
   *   - seeded per community → deterministic output, testable.
+  *
+  * Two regimes, split at [[Graph.broadcastVertexGate]]: at or below it
+  * the whole sample is ONE community-parallel job over the broadcast
+  * [[Graph.csr]] plus the broadcast LPA labels ([[csrSample]]); above
+  * it the DataFrame pipeline below runs. Both give identical rows.
   */
 object CommunitySample {
 
   // two queries consume the sample (the sample itself and the
-  // sample-quality metrics); memoize per (graph, params)
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Engine-portable bounded choice: index in [0, n) derived from the
-    * first 4 md5 bytes of "seed:community:step" — in SQL this is
-    * `('0x' || substr(md5(concat(seed,':',c,':',t)), 1, 8))::BIGINT % n`,
-    * so every walk step reproduces bit-for-bit in DuckDB. */
-  private[graph] def portableChoice(seed: Long, c: Int, t: Int, n: Int): Int = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$seed:$c:$t".getBytes("UTF-8"))
-    val h = ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
-      ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
-    (h % n).toInt
-  }
+  // sample-quality metrics); memoize per (graph, params), keyed on the
+  // Graph value, whose equality is its frames' identity
+  private val cache = scala.collection.concurrent.TrieMap
+    .empty[(Graph, Double, Int, Long, Int), DataFrame]
 
   /** Sampled vertices: (community, id) — memoized per graph/params.
     * `maxCommVertices` is the giant-community guard: communities above
@@ -51,10 +45,39 @@ object CommunitySample {
   def sample(spark: SparkSession, g: Graph, alpha: Double = 2.0,
              lpaIters: Int = 5, seed: Long = 42L,
              maxCommVertices: Int = 1000000): DataFrame =
-    cache.getOrElseUpdate(
-      s"${System.identityHashCode(g)}/$alpha/$lpaIters/$seed/$maxCommVertices",
+    cache.getOrElseUpdate((g, alpha, lpaIters, seed, maxCommVertices),
       graft.Materialize.table(
-        sampleUncached(spark, g, alpha, lpaIters, seed, maxCommVertices)))
+        if (Gx.belowGate(g)) csrSample(spark, g, alpha, lpaIters, seed, maxCommVertices)
+        else sampleUncached(spark, g, alpha, lpaIters, seed, maxCommVertices)))
+
+  /** Below the vertex gate: ONE community-parallel job. The LPA labels
+    * (one int per [[Graph.csr]] index) are broadcast next to the CSR;
+    * communities are split across at most one task per core, and each
+    * task computes, per community it owns, the intra-community degrees
+    * and triangles, `avg_cc` and `walk_len`, the giant-community
+    * thinning and the md5-seeded walk ([[Csr.communityWalk]]) — the
+    * same arithmetic as the DataFrame branch, so the same rows. */
+  private def csrSample(spark: SparkSession, g: Graph, alpha: Double,
+                        lpaIters: Int, seed: Long,
+                        maxCommVertices: Int): DataFrame = {
+    import spark.implicits._
+    val comm = GraphBuilder.communityLabels(g, lpaIters)
+    val nComm = if (comm.isEmpty) 0 else comm.max + 1
+    val bc = g.csr
+    val sc = spark.sparkContext
+    val labels = sc.broadcast(comm)
+    val slices = math.max(1, math.min(nComm, sc.defaultParallelism))
+    sc.parallelize(0 until nComm, slices).mapPartitions { owned =>
+      val c = bc.value
+      val l = labels.value
+      val (start, members) = Csr.groupBy(l, nComm)
+      owned.flatMap { k =>
+        Csr.communityWalk(c, l,
+          java.util.Arrays.copyOfRange(members, start(k), start(k + 1)),
+          alpha, seed, maxCommVertices).iterator.map(v => (k, v))
+      }
+    }.toDF("community", "id")
+  }
 
   private def sampleUncached(spark: SparkSession, g: Graph, alpha: Double,
                              lpaIters: Int, seed: Long,
@@ -79,11 +102,11 @@ object CommunitySample {
     // whole orientation+intersection pipeline on the subgraph — the
     // second pipeline measured tens of seconds at sf0.1; the filter is
     // three broadcast joins over the already-materialized enumeration.
-    val cmB = if (comms.count() <= 500000) broadcast(comms) else comms
+    // (this branch runs above the vertex gate only: no broadcast)
     val triIntra = g.triangleEnumeration
-      .join(cmB.select(col("id").as("lo"), col("community").as("c1")), "lo")
-      .join(cmB.select(col("id").as("hi"), col("community").as("c2")), "hi")
-      .join(cmB.select(col("id").as("w"), col("community").as("c3")), "w")
+      .join(comms.select(col("id").as("lo"), col("community").as("c1")), "lo")
+      .join(comms.select(col("id").as("hi"), col("community").as("c2")), "hi")
+      .join(comms.select(col("id").as("w"), col("community").as("c3")), "w")
       .filter(col("c1") === col("c2") && col("c2") === col("c3"))
       .select("lo", "hi", "w")
     val triPerVertex = triIntra.select(col("lo").as("id"))
@@ -165,12 +188,12 @@ object CommunitySample {
           // come from an md5-derived hash (portableChoice) instead of a
           // JVM PRNG: the identical choice sequence reproduces in plain
           // SQL, which makes the sampled set itself oracle-checkable.
-          var cur = vertices(portableChoice(seed, c, 0, vertices.length))
+          var cur = vertices(Csr.portableChoice(seed, c, 0, vertices.length))
           val visited = mutable.LinkedHashSet(cur)
           var steps = 1
           while (steps < walkLen) {
             val nbrs = adjMap(cur) // nonempty by construction (v has >= 1 intra edge)
-            cur = nbrs(portableChoice(seed, c, steps, nbrs.length))
+            cur = nbrs(Csr.portableChoice(seed, c, steps, nbrs.length))
             visited += cur // LinkedHashSet dedups (ref main.py:100-103)
             steps += 1
           }

@@ -27,7 +27,9 @@ import org.apache.spark.storage.StorageLevel
 object Graph {
   /** Broadcast gate for the degree/adjacency side tables: vertex sets
     * at or below this broadcast into the joins and run the broadcast-
-    * CSR kernels (square count, multi-source BFS, Brandes); above it
+    * CSR kernels (square count, multi-source BFS, Brandes, label
+    * propagation, connected components, the community walk sample);
+    * above it
     * the co-partitioned shuffle plans and GraphX Pregel loops — the
     * 100 TB branches — run. A
     * `var` ONLY so FallbackGateSpec and the bench's fallback probes
@@ -130,19 +132,29 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
       symmetrized.groupBy(col("src").as("id"))
         .agg(sort_array(collect_list(col("dst"))).as("neighbor_ids")))
 
-  /** [[collectNeighborIds]] as one broadcast [[Csr]] — the adjacency
+  /** The undirected edge set as one broadcast [[Csr]] — the adjacency
     * every below-[[Graph.broadcastVertexGate]] kernel reads (square
-    * count, [[Gx.multiSourceBfs]], [[GxBetweenness]]). Built once per
-    * graph on first use: one collect of the persisted neighbor table,
-    * shipped once per executor (|V| longs plus 2|E| + |V| + 1 ints),
-    * so the kernels run as single source- or vertex-parallel jobs
-    * instead of one Spark job per traversal level. Callers check the
-    * gate first; above it nothing builds this. */
+    * count, [[Gx.multiSourceBfs]], [[GxBetweenness]],
+    * [[Gx.labelPropagation]], [[Gx.connectedComponents]],
+    * [[CommunitySample]]). Built once per graph on first use: one
+    * collect of the edge list as primitive (src, dst) arrays per
+    * partition, arranged into CSR on the driver and shipped once per
+    * executor (|V| longs plus 2|E| + |V| + 1 ints), so the kernels run
+    * as single source-, vertex- or community-parallel jobs, or
+    * single-task ones, instead of one Spark job per traversal level or
+    * superstep. Callers check the gate first; above it nothing builds
+    * this. */
   @transient private[graft] lazy val csr: org.apache.spark.broadcast.Broadcast[Csr] = {
     val spark = edges.sparkSession
     import spark.implicits._
+    val parts = edges.select("src", "dst").as[(Long, Long)].mapPartitions { it =>
+      val s = Array.newBuilder[Long]
+      val d = Array.newBuilder[Long]
+      it.foreach { case (a, b) => s += a; d += b }
+      Iterator((s.result(), d.result()))
+    }.collect()
     spark.sparkContext.broadcast(
-      Csr(collectNeighborIds.as[(Long, Array[Long])].collect()))
+      Csr(Array.concat(parts.map(_._1): _*), Array.concat(parts.map(_._2): _*)))
   }
 
   /** Per-EDGE triangle (common-neighbor) counts: for each canonical

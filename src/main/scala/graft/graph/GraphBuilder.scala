@@ -98,39 +98,62 @@ object GraphBuilder {
     })
 
   // LPA communities are consumed by three queries (labels, count,
-  // sampling); memoize the 5-iteration run per (graph, iters).
-  private val commCache = TrieMap.empty[(String, Int), DataFrame]
+  // sampling); memoize the 5-iteration run per (graph, iters). Keyed on
+  // the Graph value, whose equality is its frames' identity.
+  private val commCache = TrieMap.empty[(Graph, Int), DataFrame]
 
-  /** Normalized LPA communities of `g`, memoized per session/dir.
-    * GraphX-backed (Gx.labelPropagation) — identical labels to the
-    * DataFrame implementation, without per-iteration planning cost. */
+  /** Normalized LPA communities of `g`: (id, community), community the
+    * dense rank of the LPA label (smallest label → 0), one row per
+    * vertex with an edge; memoized per graph. Identical labels to the
+    * DataFrame implementation on both sides of the vertex gate: below
+    * it the CSR kernel's labels ([[communityLabels]]), above it
+    * GraphX-backed (Gx.labelPropagation) without per-iteration
+    * planning cost. */
   def communities(spark: SparkSession, g: Graph, iters: Int = 5): DataFrame =
-    commCache.getOrElseUpdate((System.identityHashCode(g).toString, iters), {
+    commCache.getOrElseUpdate((g, iters), {
+      import spark.implicits._
       // persist + count (inside Materialize.table), not localCheckpoint:
       // keeps the AQE-optimized plan for the materialization (checkpoint
       // takes the non-adaptive path and measured ~10x slower on the
       // triangle pipeline); the flatten then caps consumer plan depth
-      Materialize.table(
-        Iterative.normalizeLabels(Gx.labelPropagation(g, iters)))
+      if (Gx.belowGate(g)) {
+        val ids = g.csr.value.ids
+        val comm = communityLabels(g, iters)
+        // driver-side rows: one partition, declared so (see
+        // Gx.connectedComponents)
+        Materialize.table(
+          ids.indices.map(i => (ids(i), comm(i))).toDF("id", "community").coalesce(1))
+      } else
+        Materialize.table(
+          Iterative.normalizeLabels(Gx.labelPropagation(g, iters)))
     })
+
+  private val labelCache = TrieMap.empty[(Graph, Int), Array[Int]]
+
+  /** Below the vertex gate: the community of every [[Graph.csr]] index
+    * — LPA and its dense-rank normalization in one single-task job —
+    * memoized per graph for [[communities]] and [[CommunitySample]]. */
+  private[graph] def communityLabels(g: Graph, iters: Int): Array[Int] =
+    labelCache.getOrElseUpdate((g, iters),
+      Gx.onCsr(g)(c => Csr.denseRank(Csr.labelPropagation(c, iters))))
 
   // Four queries (triangles, local/global clustering, transitivity)
   // consume per-vertex triangle counts; materialize once per graph.
-  private val triCache = TrieMap.empty[String, DataFrame]
+  private val triCache = TrieMap.empty[Graph, DataFrame]
 
   /** Per-vertex triangle counts of `g`, memoized + materialized. */
   def triangles(g: Graph): DataFrame =
-    triCache.getOrElseUpdate(System.identityHashCode(g).toString,
+    triCache.getOrElseUpdate(g,
       Materialize.table(g.triangleVertexCounts))
 
   // landmark BFS distances feed three queries (bfs, closeness, and the
   // spirit of diameter); materialize the top-8 table once — top-4 is a
   // prefix of the same (degree desc, id) ordering, so subset-filtering
   // serves the 4-landmark query
-  private val bfsCache = TrieMap.empty[String, DataFrame]
+  private val bfsCache = TrieMap.empty[(Graph, Int), DataFrame]
 
   def landmarkBfs(g: Graph, k: Int = 8): DataFrame =
-    bfsCache.getOrElseUpdate(System.identityHashCode(g).toString + "/" + k, {
+    bfsCache.getOrElseUpdate((g, k), {
       val landmarks = Iterative.topDegreeLandmarks(g, k)
         .collect().map(_.getLong(0)).toSeq
       Gx.multiSourceBfsTable(g, landmarks)
@@ -138,9 +161,9 @@ object GraphBuilder {
 
   // the double-sweep diameter estimate runs a far-vertex Pregel; both
   // g_diameter and g_summary consume it — one run per (session, graph)
-  private val diamCache = TrieMap.empty[String, DataFrame]
+  private val diamCache = TrieMap.empty[Graph, DataFrame]
 
   def diameter(g: Graph): DataFrame =
-    diamCache.getOrElseUpdate(System.identityHashCode(g).toString,
+    diamCache.getOrElseUpdate(g,
       Materialize.table(Gx.diameterEstimate(g)))
 }

@@ -27,8 +27,10 @@ import scala.collection.concurrent.TrieMap
   */
 object Gx {
 
-  private val cache = TrieMap.empty[String, XGraph[Int, Int]]
-  private def key(g: Graph) = System.identityHashCode(g).toString
+  // every memo here keys on the Graph VALUE — a case class over
+  // DataFrames whose equality is the frames' reference identity — so
+  // two live graphs can never share an entry
+  private val cache = TrieMap.empty[Graph, XGraph[Int, Int]]
 
   /** GraphX view of the canonical (src < dst) undirected edge set;
     * vertex attribute = degree. Built and cached once per Graph.
@@ -38,7 +40,7 @@ object Gx {
     * aggregateMessages communication sane on a many-executor cluster
     * (and is what GraphX's own triangleCount requires). Below that the
     * extra full-edge shuffle costs more than it saves. */
-  def of(g: Graph): XGraph[Int, Int] = cache.getOrElseUpdate(key(g), {
+  def of(g: Graph): XGraph[Int, Int] = cache.getOrElseUpdate(g, {
     val spark = g.edges.sparkSession
     import spark.implicits._
     // partition by EDGE VOLUME (~250k edges each, same rule as the
@@ -66,20 +68,39 @@ object Gx {
   })
 
   // CC feeds two queries (labels + size distribution); memoize per graph
-  private val ccCache = TrieMap.empty[String, DataFrame]
+  private val ccCache = TrieMap.empty[Graph, DataFrame]
 
-  /** Connected components: (id, component = min reachable vertex id).
-    * GraphX's pointer-jumping CC — O(log n) supersteps. Identical
-    * labels to [[Iterative.connectedComponents]]. */
+  /** Connected components: (id, component = min reachable vertex id)
+    * for every vertex with an edge — identical labels to
+    * [[Iterative.connectedComponents]]. A materialized leaf. Two
+    * regimes, split at [[Graph.broadcastVertexGate]]:
+    *  - at or below it, one single-task job labels every component
+    *    over the broadcast [[Graph.csr]] ([[Csr.components]]) and
+    *    caches the one-partition result;
+    *  - above it, GraphX's CC — O(diameter) Pregel supersteps — whose
+    *    state is freed once the labels are materialized. */
   def connectedComponents(g: Graph): DataFrame =
-    ccCache.getOrElseUpdate(key(g), {
+    ccCache.getOrElseUpdate(g, {
       val spark = g.edges.sparkSession
       import spark.implicits._
-      val df = of(g).connectedComponents().vertices
-        .map { case (id, c) => (id, c) }.toDF("id", "component")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
+      if (belowGate(g)) {
+        val bc = g.csr
+        val labelled = spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
+          val c = bc.value
+          val comp = Csr.components(c)
+          Iterator.tabulate(c.size)(i => (c.ids(i), c.ids(comp(i))))
+        }
+        // the task's output is one partition; saying so (coalesce(1))
+        // lets the cache build in that same job and lets consumers
+        // group it without an exchange
+        graft.Materialize.table(labelled.toDF("id", "component").coalesce(1))
+      } else {
+        val xg = of(g)
+        releasingState(spark.sparkContext)(xg.connectedComponents()) { cg =>
+          graft.Materialize.table(cg.vertices
+            .map { case (id, c) => (id, c) }.toDF("id", "component"))
+        }
+      }
     })
 
   /** Fixed-iteration PageRank, exact [[Iterative.pageRank]] semantics:
@@ -164,7 +185,7 @@ object Gx {
 
   // one array-state run serves pagerank + single PPR + parallel PPR;
   // memoize the long-form (id, slot, rank) table per (graph, sources)
-  private val ranksCache = TrieMap.empty[String, DataFrame]
+  private val ranksCache = TrieMap.empty[(Graph, Seq[Long]), DataFrame]
 
   /** The standard-parameter rank family (10 iterations, damping 0.85)
     * in ONE message loop: slot 0 = uniform-teleport PageRank, slot i＞0
@@ -176,7 +197,7 @@ object Gx {
     * Returns the persisted long-form (id, slot, rank), UNROUNDED —
     * consumers round at their output surface. */
   def standardRanks(g: Graph, sources: Seq[Long]): DataFrame =
-    ranksCache.getOrElseUpdate(key(g) + ":" + sources.mkString(","), {
+    ranksCache.getOrElseUpdate((g, sources.toList), {
       val spark = g.edges.sparkSession
       import spark.implicits._
       val damping = 0.85
@@ -227,7 +248,7 @@ object Gx {
     })
 
   // coreness serves the query + spec cross-checks; memoize per graph
-  private val coreCache = TrieMap.empty[String, DataFrame]
+  private val coreCache = TrieMap.empty[Graph, DataFrame]
 
   /** Full core decomposition via the SYNCHRONOUS iterated-h-index
     * fixpoint (Lü et al. 2016): every round each vertex takes the
@@ -266,7 +287,7 @@ object Gx {
     * few — 19 at sf0.01, 38 at sf0.1 — and each is one cheap
     * traversal.) */
   def coreNumbers(g: Graph, maxIter: Int = 64): DataFrame =
-    coreCache.getOrElseUpdate(key(g), {
+    coreCache.getOrElseUpdate(g, {
       val spark = g.edges.sparkSession
       import spark.implicits._
       val xg = of(g)
@@ -645,6 +666,15 @@ object Gx {
   private[graph] def belowGate(g: Graph): Boolean =
     g.vertexCount <= Graph.broadcastVertexGate
 
+  /** One single-task Spark job running `f` over the broadcast CSR; its
+    * result comes back to the driver. For the kernels that are global
+    * fixed points (label propagation, components), cheap below the gate. */
+  private[graph] def onCsr[T: scala.reflect.ClassTag](g: Graph)(f: Csr => T): T = {
+    val bc = g.csr
+    g.edges.sparkSession.sparkContext.parallelize(Seq(0), 1)
+      .map(_ => f(bc.value)).collect()(0)
+  }
+
   /** One Spark job over `sources`, split across at most one task per
     * core; each task runs `f` over the broadcast CSR. */
   private[graph] def sourceParallel[T: scala.reflect.ClassTag](
@@ -829,8 +859,25 @@ object Gx {
     * adopts its neighbors' most frequent label, ties broken by smallest
     * label; fixed iteration count (ref: labelPropagation(maxIter=5),
     * /root/reference/main.py:161 — GraphFrames runs this same loop on
-    * GraphX). */
+    * GraphX). Every vertex with an edge gets a row. Two regimes, split
+    * at [[Graph.broadcastVertexGate]]:
+    *  - at or below it, all rounds run in one single-task job over the
+    *    broadcast [[Graph.csr]] ([[Csr.labelPropagation]]) — a global
+    *    synchronous fixed point, O(iters·arcs) in one task;
+    *  - above it, one aggregateMessages per round over the GraphX
+    *    base; the round state is freed once the labels are
+    *    materialized, and a materialized leaf comes back. */
   def labelPropagation(g: Graph, iters: Int = 5): DataFrame = {
+    val spark = g.edges.sparkSession
+    import spark.implicits._
+    if (belowGate(g)) {
+      val c = g.csr.value
+      val labels = onCsr(g)(Csr.labelPropagation(_, iters))
+      c.ids.indices.map(i => (c.ids(i), c.ids(labels(i)))).toDF("id", "label")
+    } else pregelLabelPropagation(g, iters)
+  }
+
+  private def pregelLabelPropagation(g: Graph, iters: Int): DataFrame = {
     val spark = g.edges.sparkSession
     import spark.implicits._
     val xg = of(g)
@@ -872,28 +919,34 @@ object Gx {
       }
       bl
     }
-    var labels: VertexRDD[Long] = xg.vertices.mapValues((id, _) => id).cache()
-    labels.count()
-    for (_ <- 1 to iters) {
-      val mg = xg.outerJoinVertices(labels)((id, _, l) => l.getOrElse(id)).cache()
-      val msgs: VertexRDD[Array[Long]] = mg.aggregateMessages[Array[Long]](
-        ctx => {
-          ctx.sendToDst(Array(ctx.srcAttr, 1L))
-          ctx.sendToSrc(Array(ctx.dstAttr, 1L))
-        },
-        mergeVotes)
-      val prev = labels
-      labels = prev.leftJoin(msgs) { (_, old, m) =>
-        m match {
-          case Some(arr) => bestLabel(arr)
-          case None => old
-        }
-      }.cache()
+    releasingState(spark.sparkContext) {
+      var labels: VertexRDD[Long] = xg.vertices.mapValues((id, _) => id).cache()
       labels.count()
-      prev.unpersist(blocking = false)
-      mg.unpersistVertices(blocking = false)
+      for (_ <- 1 to iters) {
+        // cache() persists the round's message graph edges AND
+        // vertices; both go once the round's labels exist
+        val mg = xg.outerJoinVertices(labels)((id, _, l) => l.getOrElse(id)).cache()
+        val msgs: VertexRDD[Array[Long]] = mg.aggregateMessages[Array[Long]](
+          ctx => {
+            ctx.sendToDst(Array(ctx.srcAttr, 1L))
+            ctx.sendToSrc(Array(ctx.dstAttr, 1L))
+          },
+          mergeVotes)
+        val prev = labels
+        labels = prev.leftJoin(msgs) { (_, old, m) =>
+          m match {
+            case Some(arr) => bestLabel(arr)
+            case None => old
+          }
+        }.cache()
+        labels.count()
+        prev.unpersist(blocking = false)
+        mg.unpersist(blocking = false)
+      }
+      labels
+    } { labels =>
+      graft.Materialize.table(labels.map { case (id, l) => (id, l) }.toDF("id", "label"))
     }
-    labels.map { case (id, l) => (id, l) }.toDF("id", "label")
   }
 
   /** GraphFrames `svdPlusPlus` parity: latent-factor rating prediction

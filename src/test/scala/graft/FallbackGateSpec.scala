@@ -14,16 +14,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * oriented/intersection pipeline under both, and the no-broadcast
   * triangle-estimate plan, and the GraphX Pregel traversals (multi-
   * source BFS, diameter double sweep, shortest paths, the Brandes
-  * sweep) in place of the broadcast-CSR kernels. Fresh Graph instances
+  * sweep, label propagation, connected components) and the DataFrame
+  * community sample in place of the broadcast-CSR kernels. Fresh Graph instances
   * per side so the
   * lazy-val caches can't leak plans across gate settings; tests run
   * sequentially in the forked test JVM, so the var flip is safe. */
 class FallbackGateSpec extends AnyFunSuite {
   import SparkTestSession._
-  import graft.graph.{Graph, GraphBuilder, GraphQueries, Gx, GxBetweenness, Iterative}
+  import graft.graph.{CommunitySample, Graph, GraphBuilder, GraphQueries, Gx,
+    GxBetweenness, Iterative}
 
-  // new frames, not just a new Graph: the Brandes sweep memo keys on
-  // the Graph value, whose equality is its frames' identity
+  // new frames, not just a new Graph: the graph memos (Brandes sweep,
+  // communities, components, sample) key on the Graph value, whose
+  // equality is its frames' identity
   private def freshGraph(): Graph = {
     val g = GraphBuilder.coPurchase(spark, sf)
     Graph(g.vertices.select("*"), g.edges.select("*"))
@@ -123,6 +126,39 @@ class FallbackGateSpec extends AnyFunSuite {
     assert(small._1.map(_._1).size == 8 && small._3 > 1)
   }
 
+  test("communities, components, community sample: GraphX/DataFrame equal CSR") {
+    def run(maxCommVertices: Int) = {
+      val g = freshGraph()
+      (GraphBuilder.communities(spark, g).collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap,
+        Gx.connectedComponents(g).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        CommunitySample.sample(spark, g, maxCommVertices = maxCommVertices)
+          .collect().map(r => (r.getInt(0), r.getLong(1))).toSet)
+    }
+    val small = withGate(Long.MaxValue)(run(1000000))
+    val wide = withGate(0L)(run(1000000))
+    assert(small._1 == wide._1, "communities diverge")
+    assert(small._2 == wide._2, "components diverge")
+    assert(small._3 == wide._3, "community sample diverges")
+    assert(small._1.nonEmpty)
+    assert(small._2.size == small._1.size, "every vertex with an edge has a component")
+    assert(small._3.nonEmpty)
+    // a cap below the largest community: the thinning runs on both sides
+    val cap = 4
+    val largest = small._1.values.groupBy(identity).map(_._2.size).max
+    assert(largest > cap, s"no community above the cap: $largest")
+    val thinSmall = withGate(Long.MaxValue)(run(cap))._3
+    val thinWide = withGate(0L)(run(cap))._3
+    assert(thinSmall == thinWide, "thinned community sample diverges")
+    // communities above the cap walk only vertices past the hash cut
+    val size = small._1.values.groupBy(identity).map { case (k, v) => k -> v.size }
+    val thinnedWalks = thinSmall.filter { case (k, _) => size(k) > cap }
+    assert(thinnedWalks.nonEmpty)
+    assert(thinnedWalks.forall { case (k, v) =>
+      graft.graph.Csr.thinKeep(v, size(k), 42L, cap) })
+  }
+
   test("Pregel branches free their traversal state, keep only outputs") {
     // before: the Pregel result graphs stayed cached for the session —
     // 1 EdgeRDD + 2 VertexRDDs per multi-source BFS, 4 EdgeRDDs + 1
@@ -157,6 +193,18 @@ class FallbackGateSpec extends AnyFunSuite {
       val diam = added(before)
       // at most the landmark-BFS memo's one table; the far sweep is freed
       assert(graphX(diam).isEmpty && diam.size <= 1, s"diameter left: $diam")
+      // before: every LPA round left its message graph's EdgeRDD and
+      // the last labels VertexRDD cached; CC left its Pregel graph
+      before = persisted()
+      Gx.labelPropagation(g, 5).count()
+      val lpa = added(before)
+      assert(graphX(lpa).isEmpty, s"LPA left GraphX state: $lpa")
+      assert(lpa.size == 1, s"expected the one label table: $lpa")
+      before = persisted()
+      Gx.connectedComponents(g).count()
+      val cc = added(before)
+      assert(graphX(cc).isEmpty, s"CC left GraphX state: $cc")
+      assert(cc.size == 1, s"expected the one component table: $cc")
       // the memoized GraphX base is shared and must survive
       assert(base.nonEmpty && base.subsetOf(persisted()),
         "Gx.of(g) base was freed")

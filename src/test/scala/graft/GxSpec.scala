@@ -482,6 +482,122 @@ class GxSpec extends AnyFunSuite {
     assert(a._3 == Map(1L -> Map.empty, 2L -> Map.empty, 3L -> Map.empty))
   }
 
+  /** Raw LPA labels, normalized communities, components, the
+    * community sample (default cap and `cap`) and every schema. */
+  private final case class Communities(
+      labels: Map[Long, Long], comms: Map[Long, Int], comps: Map[Long, Long],
+      sample: Set[(Int, Long)], thinned: Set[(Int, Long)],
+      schemas: Seq[Seq[(String, String, Boolean)]])
+
+  private def communitiesOf(g: Graph, cap: Int = 1000000): Communities = {
+    val l = Gx.labelPropagation(g, 5)
+    val c = GraphBuilder.communities(spark, g)
+    val cc = Gx.connectedComponents(g)
+    val s = graph.CommunitySample.sample(spark, g, seed = 7L)
+    val t = graph.CommunitySample.sample(spark, g, seed = 7L, maxCommVertices = cap)
+    Communities(l.as[(Long, Long)].collect().toMap,
+      c.as[(Long, Int)].collect().toMap,
+      cc.as[(Long, Long)].collect().toMap,
+      s.as[(Int, Long)].collect().toSet, t.as[(Int, Long)].collect().toSet,
+      Seq(l, c, cc, s, t).map(_.schema.fields.toSeq
+        .map(f => (f.name, f.dataType.simpleString, f.nullable))))
+  }
+
+  test("toy graphs: LPA, components, sample with isolated vertices, CSR == GraphX") {
+    // a path oscillates: after 5 rounds the ends carry 2, the middle 1;
+    // both communities are intra-edgeless, so nothing is walked
+    val (a, b) = bothBranches(Seq((1L, 2L), (2L, 3L)), isolated = Seq(4L, 5L))(
+      communitiesOf(_))
+    assert(a == b)
+    assert(a.labels == Map(1L -> 2L, 2L -> 1L, 3L -> 2L))
+    assert(a.comms == Map(1L -> 1, 2L -> 0, 3L -> 1))
+    assert(a.comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    assert(a.sample.isEmpty && a.thinned.isEmpty)
+  }
+
+  test("toy graphs: LPA, components, sample over disconnected components") {
+    val two = Seq((1L, 2L), (2L, 3L), (1L, 3L),
+      (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L))
+    val (a, b) = bothBranches(two)(communitiesOf(_))
+    assert(a == b)
+    assert(a.labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 21L, 21L -> 20L))
+    assert(a.comms == Map(1L -> 0, 2L -> 0, 3L -> 0,
+      10L -> 1, 11L -> 1, 12L -> 1, 20L -> 3, 21L -> 2))
+    assert(a.comps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
+    // triangles: avg_cc 1, walk_len 3/(1+2)+1 = 2, two distinct vertices
+    // each; the singleton communities 2 and 3 have no intra edge
+    assert(a.sample.groupBy(_._1).map { case (k, v) => k -> v.size } ==
+      Map(0 -> 2, 1 -> 2))
+    assert(a.sample.forall { case (k, v) => a.comms(v) == k })
+  }
+
+  test("toy graphs: LPA, components, sample over parallel and reversed edges") {
+    val multi = Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L),
+      (1L, 3L), (4L, 5L), (5L, 4L), (3L, 5L))
+    val (a, b) = bothBranches(multi)(communitiesOf(_, cap = 2))
+    assert(a == b)
+    assert(a.comps.values.toSet == Set(1L) && a.comps.size == 5)
+    assert(a.sample.nonEmpty)
+  }
+
+  test("toy graphs: LPA, components, sample with self-loops") {
+    val loops = Seq((1L, 1L), (1L, 2L), (2L, 3L), (3L, 1L), (3L, 3L),
+      (4L, 5L), (5L, 5L), (6L, 6L))
+    val (a, b) = bothBranches(loops)(communitiesOf(_, cap = 1))
+    assert(a == b)
+    // a vertex with only a self-loop votes for itself
+    assert(a.labels(6L) == 6L && a.comps(6L) == 6L)
+    assert(a.comps(5L) == 4L && a.comps(3L) == 1L)
+    assert(a.sample.nonEmpty)
+  }
+
+  test("toy graphs: LPA ties break to the smallest label on both branches") {
+    // a 4-cycle: every vote ties 1:1 and the smaller label wins, so the
+    // labelling alternates; K4 + tail: the clique settles on its min id
+    val ties = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L),
+      (10L, 11L), (10L, 12L), (10L, 13L), (11L, 12L), (11L, 13L), (12L, 13L),
+      (13L, 14L))
+    val (a, b) = bothBranches(ties)(communitiesOf(_, cap = 3))
+    assert(a == b)
+    assert(Seq(1L, 2L, 3L, 4L).map(a.labels) == Seq(2L, 1L, 2L, 1L))
+    assert(Seq(10L, 11L, 12L, 13L, 14L).map(a.labels).toSet == Set(10L))
+    // the cycle's two communities {1,3} and {2,4} hold no intra edge
+    assert(a.sample.map(_._2).subsetOf(Set(10L, 11L, 12L, 13L, 14L)))
+    assert(a.sample.nonEmpty)
+  }
+
+  test("toy graphs: singleton communities with no intra edge walk nothing") {
+    // one edge: the two ends swap labels every round
+    val (a, b) = bothBranches(Seq((1L, 2L)))(communitiesOf(_))
+    assert(a == b)
+    assert(a.labels == Map(1L -> 2L, 2L -> 1L))
+    assert(a.comms == Map(1L -> 1, 2L -> 0))
+    assert(a.sample.isEmpty)
+  }
+
+  test("toy graphs: an empty edge set gives empty frames, same schemas") {
+    val (a, b) = bothBranches(Nil, isolated = Seq(1L, 2L))(communitiesOf(_))
+    assert(a == b)
+    assert(a.labels.isEmpty && a.comms.isEmpty && a.comps.isEmpty && a.sample.isEmpty)
+    assert(a.schemas.map(_.map(_._1)) == Seq(Seq("id", "label"),
+      Seq("id", "community"), Seq("id", "component"),
+      Seq("community", "id"), Seq("community", "id")))
+  }
+
+  test("toy graphs: a giant community thins identically on both branches") {
+    val ids = 1L to 16L
+    val clique = for { x <- ids; y <- ids if x < y } yield (x, y)
+    val (a, b) = bothBranches(clique)(communitiesOf(_, cap = 5))
+    assert(a == b)
+    assert(a.comms.values.toSet == Set(0))
+    // only vertices that pass Spark's xxhash64 cut are walked
+    assert(a.thinned.nonEmpty)
+    assert(a.thinned.forall { case (_, v) => graph.Csr.thinKeep(v, 16, 7L, 5) })
+    assert(!ids.forall(graph.Csr.thinKeep(_, 16, 7L, 5)))
+  }
+
   test("neighbor features match a local replay in exact cents") {
     val prices = graft.Tables(spark, sf).part
       .select("p_partkey", "p_retailprice").as[(Long, Double)]

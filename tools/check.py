@@ -90,12 +90,21 @@ def main(sf_dir: str, out_dir: str) -> int:
             if len(got) == 0:
                 failures += 1
             continue
-        duck_types = con.execute(
-            f"DESCRIBE {oracle[name]}").fetchdf()
+        # one oracle query that errors (e.g. DuckDB out of memory) is one
+        # failure, not the end of the run: every later query still gets
+        # checked
+        try:
+            duck_types = con.execute(
+                f"DESCRIBE {oracle[name]}").fetchdf()
+            want = norm(con.execute(oracle[name]).fetchdf())
+        except duckdb.Error as e:
+            msg = (str(e).splitlines() or [type(e).__name__])[0]
+            print(f"[oracle] {name}: ORACLE ERROR {msg}")
+            failures += 1
+            continue
         banned = [f"{r['column_name']}:{r['column_type']}"
                   for _, r in duck_types.iterrows()
                   if str(r["column_type"]).upper() in BANNED_DUCK_TYPES]
-        want = norm(con.execute(oracle[name]).fetchdf())
         status = "OK"
         if banned:
             status = (f"ORACLE TYPE {banned} — Spark has no 128-bit int; "
