@@ -15,9 +15,11 @@ import scala.collection.mutable
   * Spark-first re-expression (vs the reference's RDD groupBy +
   * partitionBy + NetworkX-per-partition):
   *   - communities come from the distributed LPA (no driver dict UDF);
-  *   - per-community clustering coefficients are computed with the
-  *     distributed triangle pipeline on the intra-community subgraph —
-  *     the reference rebuilds a NetworkX graph per partition instead;
+  *   - above the vertex gate, per-community clustering coefficients
+  *     are computed with the distributed triangle pipeline on the
+  *     intra-community subgraph (below it, by the same intersection
+  *     rule inside the CSR job, [[Csr.intraStats]]) — the reference
+  *     rebuilds a NetworkX graph per partition instead;
   *   - only the walk itself runs imperatively, inside mapPartitions on
   *     rows hash-partitioned by community: per-task state is one
   *     community's adjacency (the same memory assumption the reference

@@ -2,8 +2,9 @@ package graft.graph
 
 /** Compressed-sparse-row adjacency of a [[Graph]]'s undirected edge
   * set — the one broadcast form every below-gate kernel reads
-  * ([[Graph.csr]]: square count, multi-source BFS, Brandes, label
-  * propagation, connected components and the community walk sample).
+  * ([[Graph.csr]]: square count, per-vertex triangle counts,
+  * multi-source BFS, Brandes, label propagation, connected components
+  * and the community walk sample).
   *
   * `ids` holds the ids of the vertices that carry at least one edge,
   * ascending; vertex index `i`'s neighbors are
@@ -300,6 +301,13 @@ object Csr {
     }
     (deg, tri)
   }
+
+  /** Per-index triangle counts of the whole graph: [[intraStats]] with
+    * one community holding every vertex, so each index gets exactly the
+    * credits [[Graph.triangleVertexCounts]]' DataFrame stream sums for
+    * it. O(|V| + arcs) memory. */
+  def triangles(c: Csr): Array[Long] =
+    intraStats(c, new Array[Int](c.size), Array.tabulate(c.size)(identity))._2
 
   /** Average local clustering coefficient of one community, over ALL
     * its members (2·t / (d·(d−1)), zero below degree 2), rounded to 6

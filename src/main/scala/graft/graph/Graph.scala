@@ -27,8 +27,9 @@ import org.apache.spark.storage.StorageLevel
 object Graph {
   /** Broadcast gate for the degree/adjacency side tables: vertex sets
     * at or below this broadcast into the joins and run the broadcast-
-    * CSR kernels (square count, multi-source BFS, Brandes, label
-    * propagation, connected components, the community walk sample);
+    * CSR kernels (square count, per-vertex triangle counts, multi-
+    * source BFS, Brandes, label propagation, connected components, the
+    * community walk sample);
     * above it
     * the co-partitioned shuffle plans and GraphX Pregel loops — the
     * 100 TB branches — run. A
@@ -90,7 +91,9 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
       .withColumn("pk", round(col("n_vertices") / n, 6))
   }
 
-  /** Per-vertex triangle participation counts.
+  /** Per-vertex triangle participation counts: (id, degree, triangles),
+    * one row per vertex, isolated vertices with degree 0 and 0
+    * triangles.
     *
     * Edge-iterator with (degree, id)-ordered adjacency intersection:
     * orient each edge lo→hi by (degree, id); triangles on edge (u,v) =
@@ -98,25 +101,49 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
     * lowest-ordered edge. Unlike the classic wedge self-join (which
     * materializes Σ C(outdeg,2) rows — tens of millions on a dense
     * graph before the closing semi-join), the per-edge intersection
-    * never materializes wedges: cost is O(deg(u)+deg(v)) per edge and
-    * the only wide rows are the adjacency arrays, whose length the
-    * orientation bounds by O(√m). */
+    * never materializes wedges: cost is O(deg(u)+deg(v)) per edge.
+    *
+    * Two regimes, split at [[Graph.broadcastVertexGate]], with the same
+    * counts on any multigraph:
+    *  - at or below it, one single-task job over the broadcast [[csr]]
+    *    ([[Csr.triangles]], the community sample's intersection rule
+    *    with one community), memoized per graph as a driver-side array
+    *    of |V| longs ([[csrTriangles]]); the counts join the degrees as
+    *    a one-partition table, and nothing is persisted;
+    *  - above it, the persisted oriented DataFrame stream
+    *    ([[orientedCommon]]), whose only wide rows are the adjacency
+    *    arrays, bounded by the orientation at O(√m). */
   def triangleVertexCounts: DataFrame = {
-    val withBoth = orientedCommon
-    // contributions as a union of plain selects over the PERSISTED
-    // intersection stream — native explode generators, three cheap
-    // cache scans. (A single-pass transform(..)+concat+explode variant
-    // routed every struct through the interpreted HOF path: 10× slower.)
-    val perVertex = withBoth
-      .select(col("lo").as("id"), size(col("common")).cast("long").as("n"))
-      .union(withBoth.select(col("hi").as("id"), size(col("common")).cast("long").as("n")))
-      .union(withBoth.select(explode(col("common")).as("id")).withColumn("n", lit(1L)))
-      .groupBy("id").agg(sum("n").as("triangles"))
+    val perVertex = if (vertexCount <= Graph.broadcastVertexGate) {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val ids = csr.value.ids
+      val tri = csrTriangles
+      // driver-side rows: one partition, declared so (see
+      // GraphBuilder.communities)
+      ids.indices.map(i => (ids(i), tri(i))).toDF("id", "triangles").coalesce(1)
+    } else {
+      val withBoth = orientedCommon
+      // contributions as a union of plain selects over the PERSISTED
+      // intersection stream — native explode generators, three cheap
+      // cache scans. (A single-pass transform(..)+concat+explode variant
+      // routed every struct through the interpreted HOF path: 10× slower.)
+      withBoth
+        .select(col("lo").as("id"), size(col("common")).cast("long").as("n"))
+        .union(withBoth.select(col("hi").as("id"), size(col("common")).cast("long").as("n")))
+        .union(withBoth.select(explode(col("common")).as("id")).withColumn("n", lit(1L)))
+        .groupBy("id").agg(sum("n").as("triangles"))
+    }
     // degree rides along so every clustering consumer is a pure
     // projection/aggregate over the ONE memoized table — no re-join
     degrees.join(perVertex, Seq("id"), "left")
       .na.fill(0L, Seq("triangles"))
   }
+
+  /** Triangle count of every [[csr]] index, from one single-task job;
+    * memoized, so every triangle consumer of this graph shares one
+    * kernel run. Below the gate only. */
+  @transient private lazy val csrTriangles: Array[Long] = Gx.onCsr(this)(Csr.triangles)
 
   /** GraphFrames/GraphX `collectNeighborIds` parity: per-vertex sorted
     * neighbor-id array over the undirected edge set. One shuffle keyed
@@ -134,9 +161,9 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
 
   /** The undirected edge set as one broadcast [[Csr]] — the adjacency
     * every below-[[Graph.broadcastVertexGate]] kernel reads (square
-    * count, [[Gx.multiSourceBfs]], [[GxBetweenness]],
-    * [[Gx.labelPropagation]], [[Gx.connectedComponents]],
-    * [[CommunitySample]]). Built once per graph on first use: one
+    * count, [[triangleVertexCounts]], [[Gx.multiSourceBfs]],
+    * [[GxBetweenness]], [[Gx.labelPropagation]],
+    * [[Gx.connectedComponents]], [[CommunitySample]]). Built once per graph on first use: one
     * collect of the edge list as primitive (src, dst) arrays per
     * partition, arranged into CSR on the driver and shipped once per
     * executor (|V| longs plus 2|E| + |V| + 1 ints), so the kernels run
@@ -204,11 +231,6 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
         sum(lit(1.0) / log(col("degree"))).as("aa_sum")))
   }
 
-  /** Oriented edges with their higher-neighborhood intersections —
-    * shared guts of [[triangleVertexCounts]] / [[triangleEdgeCounts]].
-    * A lazy val: GraphBuilder caches Graph instances per dir, so the
-    * persisted intersection stream is computed once per graph no matter
-    * how many triangle-derived queries consume it. */
   /** Degree-ordered oriented edge set (lo→hi by (degree, id)) — the
     * acyclic orientation under every triangle/clique kernel. */
   @transient private lazy val orientedEdges: DataFrame = {
@@ -234,6 +256,13 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
     graft.Materialize.table(orientedEdges.groupBy(col("lo").as("v"))
       .agg(sort_array(collect_list(col("hi"))).as("nbrs")))
 
+  /** Oriented edges with their higher-neighborhood intersections —
+    * shared guts of the edge-level consumers ([[triangleEnumeration]],
+    * [[edgeCommonStats]], [[clique4Count]]) on both sides of the gate,
+    * and of [[triangleVertexCounts]] above it. A lazy val: GraphBuilder
+    * caches Graph instances per dir, so the persisted intersection
+    * stream is computed once per graph no matter how many triangle-
+    * derived queries consume it. */
   @transient private lazy val orientedCommon: DataFrame = {
     // adjacency is one array-row per vertex; when it fits comfortably in
     // a broadcast (the usual case for graphs whose vertex set is orders

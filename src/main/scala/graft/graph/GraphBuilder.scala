@@ -137,8 +137,12 @@ object GraphBuilder {
     labelCache.getOrElseUpdate((g, iters),
       Gx.onCsr(g)(c => Csr.denseRank(Csr.labelPropagation(c, iters))))
 
-  // Four queries (triangles, local/global clustering, transitivity)
-  // consume per-vertex triangle counts; materialize once per graph.
+  // Seven queries (triangles, local/global clustering, transitivity,
+  // summary, clustering null, sample metrics) consume per-vertex
+  // triangle counts; materialize the (id, degree, triangles) table
+  // once per graph. Below the vertex gate this memo is the only
+  // table persisted for it (the counts come from one CSR job); above
+  // it the oriented stream under it is persisted too.
   private val triCache = TrieMap.empty[Graph, DataFrame]
 
   /** Per-vertex triangle counts of `g`, memoized + materialized. */

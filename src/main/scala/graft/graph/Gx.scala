@@ -668,7 +668,8 @@ object Gx {
 
   /** One single-task Spark job running `f` over the broadcast CSR; its
     * result comes back to the driver. For the kernels that are global
-    * fixed points (label propagation, components), cheap below the gate. */
+    * fixed points (label propagation, components) or whole-graph counts
+    * (per-vertex triangles), cheap below the gate. */
   private[graph] def onCsr[T: scala.reflect.ClassTag](g: Graph)(f: Csr => T): T = {
     val bc = g.csr
     g.edges.sparkSession.sparkContext.parallelize(Seq(0), 1)

@@ -138,6 +138,39 @@ class CsrSpec extends AnyFunSuite {
     assert(deg.toSeq == Seq(2L, 2L, 2L) && t.toSeq == Seq(1L, 1L, 1L))
   }
 
+  test("whole-graph triangle counts == the DataFrame rows replayed") {
+    // plus denser multigraphs, where most vertices close triangles
+    val dense = (1 to 6).map(i => randomEdges(100 + i, 8 + i, 30 + 6 * i))
+    (graphs ++ dense).foreach { e =>
+      val c = csrOf(e)
+      val got = Csr.triangles(c)
+      val want = replayStats(e, _ => 0, 0)
+      assert(c.ids.indices.map(i => c.ids(i) -> got(i)).toMap ==
+        want.map { case (v, (_, t)) => v -> t }, s"$e")
+    }
+    assert(Csr.triangles(csrOf(Nil)).isEmpty)
+  }
+
+  test("whole-graph triangle counts on simple graphs == brute-force triples") {
+    (1 to 8).foreach { i =>
+      val simple = randomEdges(200 + i, 10 + i, 40 + 5 * i)
+        .collect { case (s, d) if s != d => (math.min(s, d), math.max(s, d)) }
+        .distinct
+      val c = csrOf(simple)
+      val adj = adjacency(simple).map { case (v, ns) => v -> ns.toSet }
+      val vs = c.ids.toSeq
+      val brute = vs.map { v =>
+        v -> adj(v).toSeq.combinations(2).count { case Seq(a, b) => adj(a)(b) }.toLong
+      }.toMap
+      val got = Csr.triangles(c)
+      assert(vs.indices.map(k => vs(k) -> got(k)).toMap == brute, s"$simple")
+      assert(brute.values.sum > 0, "no triangle in the fixture")
+    }
+    // K4 plus a pendant: 3 triangles per clique vertex, none at the tail
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+    assert(Csr.triangles(csrOf(k4)).toSeq == Seq(3L, 3L, 3L, 3L, 0L))
+  }
+
   test("community walk == the DataFrame sample's walk replayed") {
     def keep(id: Long, n: Int, seed: Long, cap: Int): Boolean = {
       val h = XXH64.hashLong(seed, XXH64.hashLong(id, 42L))

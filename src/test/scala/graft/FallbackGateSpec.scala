@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * oriented/intersection pipeline under both, and the no-broadcast
   * triangle-estimate plan, and the GraphX Pregel traversals (multi-
   * source BFS, diameter double sweep, shortest paths, the Brandes
-  * sweep, label propagation, connected components) and the DataFrame
-  * community sample in place of the broadcast-CSR kernels. Fresh Graph instances
+  * sweep, label propagation, connected components), the DataFrame
+  * community sample and the oriented triangle stream under the per-
+  * vertex triangle counts in place of the broadcast-CSR kernels. Fresh Graph instances
   * per side so the
   * lazy-val caches can't leak plans across gate settings; tests run
   * sequentially in the forked test JVM, so the var flip is safe. */
@@ -159,6 +160,32 @@ class FallbackGateSpec extends AnyFunSuite {
       graft.graph.Csr.thinKeep(v, size(k), 42L, cap) })
   }
 
+  test("triangles, clustering, census, sample metrics: oriented stream equals CSR") {
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    def metrics(g: Graph) =
+      (rows(g.triangleVertexCounts), rows(g.clusteringCoefficients),
+        g.averageClustering.head().getDouble(0), g.transitivity.head().getDouble(0))
+    def run() = {
+      val g = freshGraph()
+      val tri = GraphBuilder.triangles(g)
+      // the sample subgraph as the benchmark's sample-metrics pass builds it
+      val ids = CommunitySample.sample(spark, g).select("id")
+      val sg = Graph(ids, g.inducedSubgraphEdges(ids))
+      (rows(tri), tri.schema, metrics(g),
+        rows(GraphQueries.graphletCensusOf(g)), metrics(sg))
+    }
+    val small = withGate(Long.MaxValue)(run())
+    val wide = withGate(0L)(run())
+    assert(small._1 == wide._1, "triangle table diverges")
+    assert(small._2 == wide._2, "triangle table schema diverges")
+    assert(small._3 == wide._3, "graph clustering/transitivity diverge")
+    assert(small._4 == wide._4, "graphlet census diverges")
+    assert(small._5 == wide._5, "sample subgraph metrics diverge")
+    assert(small._1.map(_(2).asInstanceOf[Long]).sum > 0L, "no triangle in the graph")
+    assert(small._5._1.map(_(2).asInstanceOf[Long]).sum > 0L, "no triangle in the sample")
+  }
+
   test("Pregel branches free their traversal state, keep only outputs") {
     // before: the Pregel result graphs stayed cached for the session —
     // 1 EdgeRDD + 2 VertexRDDs per multi-source BFS, 4 EdgeRDDs + 1
@@ -209,5 +236,20 @@ class FallbackGateSpec extends AnyFunSuite {
       assert(base.nonEmpty && base.subsetOf(persisted()),
         "Gx.of(g) base was freed")
     }
+    // below the gate the triangle memo is the one table the triangle
+    // counts persist: no oriented edge, adjacency or intersection table
+    // (above it those three sit under the memo)
+    def triangleTables(gate: Long): Seq[String] = withGate(gate) {
+      val g = freshGraph()
+      g.degrees
+      g.vertexCount
+      val before = sc.getPersistentRDDs.keySet.toSet
+      GraphBuilder.triangles(g)
+      added(before)
+    }
+    val small = triangleTables(Long.MaxValue)
+    assert(small.size == 1, s"expected only the triangle memo: $small")
+    val wide = triangleTables(0L)
+    assert(wide.size == 4, s"expected the oriented tables and the memo: $wide")
   }
 }

@@ -598,6 +598,106 @@ class GxSpec extends AnyFunSuite {
     assert(!ids.forall(graph.Csr.thinKeep(_, 16, 7L, 5)))
   }
 
+  /** The memoized triangle table (id, degree, triangles), the direct
+    * per-vertex counts, clustering coefficients, average clustering
+    * and both schemas. */
+  private final case class Triangles(
+      rows: Set[(Long, Long, Long)], direct: Set[(Long, Long, Long)],
+      cc: Map[Long, Double], avgCc: Option[Double],
+      schemas: Seq[Seq[(String, String, Boolean)]])
+
+  private def trianglesOf(g: Graph): Triangles = {
+    val memo = GraphBuilder.triangles(g)
+    val direct = g.triangleVertexCounts
+    Triangles(memo.as[(Long, Long, Long)].collect().toSet,
+      direct.as[(Long, Long, Long)].collect().toSet,
+      g.clusteringCoefficients.select("id", "clustering_coeff")
+        .as[(Long, Double)].collect().toMap,
+      Option(g.averageClustering.head().get(0)).map(_.asInstanceOf[Double]),
+      Seq(memo, direct).map(_.schema.fields.toSeq
+        .map(f => (f.name, f.dataType.simpleString, f.nullable))))
+  }
+
+  private def transitivityOf(g: Graph): Double = g.transitivity.as[Double].head()
+
+  test("toy graphs: triangles of K4 plus isolated vertices, CSR == oriented stream") {
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+    val (a, b) = bothBranches(k4, isolated = Seq(8L, 9L))(trianglesOf)
+    assert(a == b)
+    assert(a.rows == Set((1L, 3L, 3L), (2L, 3L, 3L), (3L, 3L, 3L), (4L, 4L, 3L),
+      (5L, 1L, 0L), (8L, 0L, 0L), (9L, 0L, 0L)))
+    assert(a.direct == a.rows)
+    assert(a.cc == Map(1L -> 1.0, 2L -> 1.0, 3L -> 1.0, 4L -> 0.5,
+      5L -> 0.0, 8L -> 0.0, 9L -> 0.0))
+    assert(a.avgCc == Some(0.5))
+    // 4 triangles over 3+3+3+6 wedges
+    val (t, u) = bothBranches(k4, isolated = Seq(8L, 9L))(transitivityOf)
+    assert(t == u && t == 0.8)
+  }
+
+  test("toy graphs: triangles over parallel and reversed edges, CSR == oriented stream") {
+    // the 1–2 edge twice (once reversed) is the triangle's lowest
+    // oriented edge, so each of its copies credits 1, 2 and 3 once
+    val multi = Seq((1L, 2L), (2L, 1L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L), (3L, 6L))
+    val (a, b) = bothBranches(multi)(trianglesOf)
+    assert(a == b)
+    assert(a.rows == Set((1L, 3L, 2L), (2L, 3L, 2L), (3L, 5L, 2L),
+      (4L, 1L, 0L), (5L, 1L, 0L), (6L, 1L, 0L)))
+    val (t, u) = bothBranches(multi)(transitivityOf)
+    assert(t == u)
+  }
+
+  test("toy graphs: triangles with a self-loop, CSR == oriented stream") {
+    // the loop (1, 1) is an oriented edge of its own and 1 joins its
+    // own out-set, so its rows credit vertex 1 beyond the one triangle
+    val loop = Seq((1L, 1L), (1L, 2L), (2L, 3L), (1L, 3L))
+    val (a, b) = bothBranches(loop)(trianglesOf)
+    assert(a == b)
+    assert(a.rows == Set((1L, 4L, 8L), (2L, 2L, 2L), (3L, 2L, 2L)))
+    val (t, u) = bothBranches(loop)(transitivityOf)
+    assert(t == u)
+  }
+
+  test("toy graphs: triangles of an empty edge set, CSR == oriented stream") {
+    val (a, b) = bothBranches(Nil, isolated = Seq(1L, 2L))(trianglesOf)
+    assert(a == b)
+    assert(a.rows == Set((1L, 0L, 0L), (2L, 0L, 0L)) && a.avgCc == Some(0.0))
+    // no vertex at all: empty frames with the usual schema
+    val (c, d) = bothBranches(Nil)(trianglesOf)
+    assert(c == d)
+    assert(c.rows.isEmpty && c.direct.isEmpty && c.cc.isEmpty && c.avgCc.isEmpty)
+    assert(c.schemas.map(_.map(_._1)) == Seq.fill(2)(Seq("id", "degree", "triangles")))
+  }
+
+  test("triangle counts: one CSR kernel job per graph serves every consumer") {
+    val sc = spark.sparkContext
+    // jobs `f` starts; the status store sees jobs in submission order,
+    // so once a marker job after `f` shows, every job of `f` has
+    def jobsIn(group: String)(f: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", group)
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 30000
+      while (sc.statusTracker.getJobIdsForGroup(s"$group-end").isEmpty &&
+        System.currentTimeMillis() < deadline) Thread.sleep(20)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
+    val g = Graph(GraphBuilder.vertices(e), e)
+    g.vertexCount
+    g.degrees
+    g.csr
+    assert(jobsIn("tri-first")(g.triangleVertexCounts) == 1)
+    assert(jobsIn("tri-again") {
+      g.triangleVertexCounts
+      g.clusteringCoefficients
+      g.averageClustering
+      g.transitivity
+    } == 0)
+    assert(g.transitivity.as[Double].head() == 0.6)
+  }
+
   test("neighbor features match a local replay in exact cents") {
     val prices = graft.Tables(spark, sf).part
       .select("p_partkey", "p_retailprice").as[(Long, Double)]

@@ -423,6 +423,24 @@ class PlanQualitySpec extends AnyFunSuite {
     // and no cartesian/nested-loop pair enumeration anywhere
     val bad = plan.treeString
     assert(!bad.contains("CartesianProduct"), bad)
+    // below the vertex gate the per-vertex triangle counts come from
+    // the CSR kernel and that plan has no explode(common) left; the
+    // gate-forced plan reads the oriented stream and must keep to the
+    // same generates
+    val old = graft.graph.Graph.broadcastVertexGate
+    val wide = try {
+      graft.graph.Graph.broadcastVertexGate = 0L
+      val g0 = graft.graph.GraphBuilder.coPurchase(spark, sf)
+      graft.graph.GraphQueries.graphletCensusOf(
+        graft.graph.Graph(g0.vertices.select("*"), g0.edges.select("*")))
+        .queryExecution.sparkPlan
+    } finally graft.graph.Graph.broadcastVertexGate = old
+    val wideGens = wide.collect {
+      case g: org.apache.spark.sql.execution.GenerateExec => g.generator.toString
+    }
+    assert(wideGens.exists(_.contains("common")), wideGens)
+    wideGens.foreach(s => assert(s.contains("common") || s.contains("graphlet"), s))
+    assert(!wide.treeString.contains("CartesianProduct"), wide.treeString)
   }
 
   test("sq decode: per-dim stats broadcast once, dequantize is map-side") {
