@@ -6,37 +6,27 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** SQL surface for the native expressions: after `register(spark)`,
   * `spark.sql("SELECT cosine_sim(a, b) ...")` works — the same operators
   * are reachable from the DataFrame API, SQL, and (via the registry)
-  * views or thrift-server clients.
+  * views or thrift-server clients. [[all]] is the one binding table;
+  * `register` and [[graft.plans.GraftExtensions]] both iterate it.
   */
 object GraftFunctions {
 
-  private def one(name: String)(f: Expression => Expression)
-                 (implicit spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => f(exprs.head), "built-in")
+  val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
+    "minhash_sig" -> (es => MinHashSignature(es.head, numPerm = 128, seed = 42L)),
+    "simhash64" -> (es => SimHash64(es.head, seed = 42L)),
+    "hyperplane_lsh" -> (es => HyperplaneLsh(es.head, nBits = 48, seed = 42L)),
+    "equal_fraction" -> (es => EqualFraction(es(0), es(1))),
+    "jaccard_sorted" -> (es => JaccardSorted(es(0), es(1))),
+    "sorted_intersect_count" -> (es => SortedLongIntersectCount(es(0), es(1))),
+    "kth_absent" -> (es => KthAbsent(es(0), es(1))),
+    "byte_stride" -> (es => ByteStride(es(0), es(1))),
+    "avg_hash64" -> (es => AvgHash64(es.head)),
+    "n2v_pick" -> (es => Node2vecPick(es(0), es(1), es(2), es(3))))
 
-  def register(session: SparkSession): Unit = {
-    implicit val spark: SparkSession = session
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    one("minhash_sig")(e => MinHashSignature(e, numPerm = 128, seed = 42L))
-    one("simhash64")(e => SimHash64(e, seed = 42L))
-    one("hyperplane_lsh")(e => HyperplaneLsh(e, nBits = 48, seed = 42L))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "equal_fraction", exprs => EqualFraction(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaccard_sorted", exprs => JaccardSorted(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kth_absent", exprs => KthAbsent(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_stride", exprs => ByteStride(exprs(0), exprs(1)), "built-in")
-    one("avg_hash64")(e => AvgHash64(e))
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "n2v_pick",
-      exprs => Node2vecPick(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
-  }
+  def register(spark: SparkSession): Unit =
+    all.foreach { case (name, f) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, f, "built-in")
+    }
 }

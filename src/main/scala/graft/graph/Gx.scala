@@ -8,22 +8,21 @@ import scala.collection.concurrent.TrieMap
 
 /** GraphX-backed iterative algorithms.
   *
-  * The DataFrame-iterative versions in [[Iterative]] are correct but pay
-  * Catalyst analysis + shuffle + checkpoint overhead PER ITERATION —
-  * measured seconds per round regardless of data size. GraphX (Spark's
-  * own Pregel engine, and what GraphFrames — the reference's engine —
-  * executes on) keeps the vertex/edge RDDs partitioned and cached across
-  * supersteps, so a 10-iteration PageRank is one job chain over
-  * co-partitioned RDDs instead of 10 freshly planned shuffles. The
+  * DataFrame-iterative loops pay Catalyst analysis + shuffle +
+  * checkpoint overhead PER ITERATION — measured seconds per round
+  * regardless of data size. GraphX (Spark's own Pregel engine, and
+  * what GraphFrames — the reference's engine — executes on) keeps the
+  * vertex/edge RDDs partitioned and cached across supersteps, so a
+  * 10-iteration PageRank is one job chain over co-partitioned RDDs
+  * instead of 10 freshly planned shuffles. The
   * reference itself runs LPA through GraphFrames → GraphX
   * (/root/reference/main.py:161), so this IS the reference's execution
   * model, minus the Python driver.
   *
-  * Semantics are kept EXACTLY equal to [[Iterative]] (same init, same
-  * update rule, same deterministic tie-breaks) so both the DuckDB
-  * oracles and the DF-vs-GraphX cross-check specs can compare results.
-  * [[Iterative]] remains the independent implementation used by the
-  * cross-validation specs.
+  * Every algorithm states its semantics (init, update rule,
+  * deterministic tie-breaks) in its scaladoc; the DuckDB oracles and the
+  * specs' driver-side replays pin both sides of
+  * [[Graph.broadcastVertexGate]] to them.
   */
 object Gx {
 
@@ -71,8 +70,8 @@ object Gx {
   private val ccCache = TrieMap.empty[Graph, DataFrame]
 
   /** Connected components: (id, component = min reachable vertex id)
-    * for every vertex with an edge — identical labels to
-    * [[Iterative.connectedComponents]]. A materialized leaf. Two
+    * for every vertex with an edge; a vertex without an edge gets no
+    * row. A materialized leaf. Two
     * regimes, split at [[Graph.broadcastVertexGate]]:
     *  - at or below it, one single-task job labels every component
     *    over the broadcast [[Graph.csr]] ([[Csr.components]]) and
@@ -103,10 +102,10 @@ object Gx {
       }
     })
 
-  /** Fixed-iteration PageRank, exact [[Iterative.pageRank]] semantics:
-    * rank₀ = 1; rankᵢ₊₁ = (1−d) + d·Σ_nbr rankᵢ/deg over the undirected
-    * neighborhood. One aggregateMessages per round over the cached
-    * edge partitions. */
+  /** Fixed-iteration PageRank: rank₀ = 1; rankᵢ₊₁ = (1−d) +
+    * d·Σ_nbr rankᵢ/deg over the undirected neighborhood (ranks sum to
+    * ~|V|), rounded to 6 decimals, a row per vertex with an edge. One
+    * aggregateMessages per round over the cached edge partitions. */
   def pageRank(g: Graph, iters: Int = 10, damping: Double = 0.85): DataFrame =
     rankLoop(g, iters,
       init = (_, _) => 1.0,
@@ -172,9 +171,9 @@ object Gx {
       .select(col("id"), round(col("rank"), 6).as("pagerank"))
   }
 
-  /** Personalized PageRank (random walk with restart): teleport mass
-    * concentrates on `sourceId`. Exact
-    * [[Iterative.personalizedPageRank]] semantics. */
+  /** Personalized PageRank (random walk with restart): [[pageRank]]
+    * with rank₀ = 1 and the teleport mass (1−d) on `sourceId` only,
+    * 0 elsewhere; rounded to 6 decimals. */
   def personalizedPageRank(g: Graph, sourceId: Long, iters: Int = 10,
                            damping: Double = 0.85): DataFrame =
     rankLoop(g, iters,
@@ -638,9 +637,9 @@ object Gx {
   }
 
   /** Multi-source BFS: exact hop distances from each landmark, as
-    * (landmark, v, dist) rows for every reachable v — identical to
-    * [[Iterative.multiSourceBfs]] (which capped at 30 rounds; both
-    * branches here run to quiescence). A landmark without an edge, or
+    * (landmark, v, dist) rows for every reachable v, the landmark
+    * itself at dist 0; both branches run to quiescence, with no round
+    * cap. A landmark without an edge, or
     * not in the graph, contributes no row; duplicate landmarks count
     * once.
     *
@@ -851,16 +850,16 @@ object Gx {
     * ((reachable−1)/Σdist) fed the FULL distance table instead of
     * landmark rows, making it exactly nx.closeness_centrality
     * (wf_improved=False) on each component; isolates carry no row,
-    * matching the landmark twin. */
+    * as in the landmark closeness. */
   def exactCloseness(g: Graph, batchSize: Int = 512): DataFrame =
     Iterative.closenessFrom(exactAllDistances(g, batchSize))
 
-  /** Synchronous label propagation, exact [[Iterative.labelPropagation]]
-    * semantics: labels start as vertex ids; each round every vertex
-    * adopts its neighbors' most frequent label, ties broken by smallest
-    * label; fixed iteration count (ref: labelPropagation(maxIter=5),
-    * /root/reference/main.py:161 — GraphFrames runs this same loop on
-    * GraphX). Every vertex with an edge gets a row. Two regimes, split
+  /** Synchronous label propagation: labels start as vertex ids; each
+    * round every vertex adopts its neighbors' most frequent label (one
+    * vote per arc), ties broken by smallest label; fixed iteration
+    * count (ref: labelPropagation(maxIter=5), /root/reference/main.py:161
+    * — GraphFrames runs this same loop on GraphX). Every vertex with an
+    * edge gets a row. Two regimes, split
     * at [[Graph.broadcastVertexGate]]:
     *  - at or below it, all rounds run in one single-task job over the
     *    broadcast [[Graph.csr]] ([[Csr.labelPropagation]]) — a global
@@ -1159,9 +1158,9 @@ object Gx {
       .orderBy("t")
   }
 
-  /** Double-sweep diameter lower bound, exact
-    * [[Iterative.diameterEstimate]] semantics: BFS from the max-degree
-    * vertex, then BFS from the farthest vertex found (ties: min id). */
+  /** Double-sweep diameter lower bound (ref: nx.diameter): BFS from the
+    * max-degree vertex, then from the farthest vertex found (ties: min
+    * id both times); one row, the second sweep's eccentricity. */
   def diameterEstimate(g: Graph): DataFrame = {
     val lm1 = Iterative.topDegreeLandmarks(g, 1).head().getLong(0)
     // sweep 1 reuses the session-cached 8-landmark BFS: landmark #1 IS

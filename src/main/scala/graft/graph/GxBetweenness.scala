@@ -4,10 +4,10 @@ import org.apache.spark.graphx.{EdgeDirection, Pregel, VertexRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Brandes betweenness from k seeded-uniform sources — same estimator
-  * as [[Betweenness]] (Brandes–Pich n/k extrapolation, each unordered
-  * pair counted once) without the per-iteration DataFrame planning
-  * cost. Two regimes, split at [[Graph.broadcastVertexGate]]:
+/** Brandes betweenness (ref: nx.betweenness_centrality) from k seeded
+  * UNIFORM md5-ordered sources: the Brandes–Pich estimator, scaled by
+  * n/k (unbiased only for uniform sources), each unordered pair counted
+  * once. Two regimes, split at [[Graph.broadcastVertexGate]]:
   *
   *  - at or below it, ONE source-parallel Spark job over the graph's
   *    broadcast CSR ([[csrSweep]]): sources are split across tasks,
@@ -115,8 +115,8 @@ object GxBetweenness {
     val spark = g.edges.sparkSession
     import spark.implicits._
     val n = g.vertexCount
-    // md5-ordered uniform sample — engine-portable source selection,
-    // same ordering as Betweenness.run and the DuckDB oracle
+    // md5-ordered uniform sample, not xxhash64: md5 reproduces in any
+    // engine, so the DuckDB oracle picks the same sources
     val sources = g.vertices
       .orderBy(md5(concat_ws(":", col("id"), lit(seed))), col("id"))
       .limit(numSources).select("id").as[Long].collect().toSeq
@@ -137,9 +137,9 @@ object GxBetweenness {
           ((col("depmicro") * lit(n)).cast("double") / lit(k * 2.0 * 1.0e9))
             .as("edge_betweenness"))
       val (edgeHandle, edgeTable) = matKeep(edgeOut)
-      // no final round(): see Betweenness.run — the exact rational
-      // depMicro·n/(k·2·1e9) is bit-identical across engines, a decimal
-      // rounding of micro-grid values is not (.5-tie divergence)
+      // no final round(): micro-grid values sit on decimal .5 ties that
+      // Spark (shortest-decimal HALF_UP) and binary-double engines round
+      // apart; the exact rational depMicro·n/(k·2·1e9) is bit-identical
       val (vtxHandle, vtxTable) = matKeep(
         g.vertices.select("id")
           .join(dep, Seq("id"), "left")
@@ -373,8 +373,8 @@ object GxBetweenness {
     // δ is FIXED-POINT (long micro-units, 1e-9): each contribution
     // σv/σw·(1e9+δw) is rounded to a long before summing, so merges are
     // exact integer adds — independent of GraphX's message-merge order,
-    // hence deterministic run-to-run AND engine-portable (matches
-    // Betweenness.run and the DuckDB oracle bit-for-bit)
+    // hence deterministic run-to-run AND engine-portable (matches the
+    // CSR sweep and the DuckDB oracle bit-for-bit)
     var delta: VertexRDD[Array[Long]] =
       forward.vertices.mapValues(_ => new Array[Long](sources.size)).cache()
     delta.count()

@@ -1,10 +1,14 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Iterative graph algorithms, DataFrame-native.
+/** The DataFrame-iterative graph algorithms that have no GraphX or CSR
+  * counterpart in [[Gx]]: Louvain (phase-1 moves and the two-level
+  * contraction), the Borůvka minimum spanning forest and greedy
+  * coloring; plus the label normalization and the landmark and path
+  * helpers that read [[Gx]]'s BFS tables (landmark picks, closeness,
+  * harmonic centrality, average path length, canonical BFS paths).
   *
   * Shared scale mechanics: every iteration ends in `localCheckpoint`
   * (eager) — without it the lineage doubles per round and Catalyst
@@ -13,90 +17,6 @@ import org.apache.spark.sql.functions._
   * aggregate-only (count / hash-sum), never a collect of the state.
   */
 object Iterative {
-
-  /** Connected components via alternating large-star / small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) — O(log n) rounds regardless of diameter, vs O(diameter)
-    * for naive min-propagation; the difference between 8 and 60 shuffles
-    * on a 100 TB high-diameter graph.
-    *
-    * Returns (id, component) where component = min vertex id reachable.
-    * (GraphFrames surface: g.connectedComponents(); the reference relies
-    * on the same via NetworkX.)
-    */
-  def connectedComponents(g: Graph, maxIter: Int = 50): DataFrame = {
-    var e = g.edges.select(col("src").as("u"), col("dst").as("v"))
-      .filter(col("u") =!= col("v"))
-    var prevSig: (Long, Long) = (-1L, -1L)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // large-star: every neighbor v > u links to m = min(N(u) ∪ {u})
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("minv"))
-        .select(col("u"), least(col("u"), col("minv")).as("m"))
-      val large = sym.join(mins, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // small-star: orient big→small; all small neighbors + self link to min
-      val dir = large.select(greatest(col("u"), col("v")).as("a"),
-        least(col("u"), col("v")).as("b")).distinct()
-      val smins = dir.groupBy("a").agg(min("b").as("m"))
-      val out = dir.join(smins, "a")
-        .filter(col("b") =!= col("m"))
-        .select(col("b").as("u"), col("m").as("v"))
-        .union(smins.select(col("a").as("u"), col("m").as("v")))
-        .distinct()
-      e = out.localCheckpoint(true)
-      // order-insensitive, overflow-free state signature (ANSI-safe)
-      val row = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      val sig = (row.getLong(0), row.getLong(1))
-      converged = sig == prevSig
-      prevSig = sig
-      i += 1
-    }
-    // fixpoint is a star: u→root. Roots and isolated vertices map to self.
-    val labeled = e.select(col("u").as("id"), col("v").as("component"))
-    g.vertices.select("id")
-      .join(labeled, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-  }
-
-  /** Synchronous label propagation, deterministic: each round every
-    * vertex adopts its neighbors' most frequent label, ties broken by
-    * smallest label. Fixed iteration count, like the reference's
-    * labelPropagation(maxIter=5) (/root/reference/main.py:161).
-    *
-    * Two shuffles per round (neighbor-label count, per-vertex argmax);
-    * both partial-aggregate friendly.
-    */
-  def labelPropagation(g: Graph, maxIter: Int = 5): DataFrame = {
-    val sym = g.symmetrized.localCheckpoint(true) // (src, dst)
-    var labels = g.vertices.select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
-    for (_ <- 1 to maxIter) {
-      val neighborLabels = sym
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy("id")
-        .orderBy(col("cnt").desc, col("label").asc)
-      val next = neighborLabels
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("id", "label")
-      // vertices with no neighbors keep their label
-      labels = g.vertices.select("id")
-        .join(next, Seq("id"), "left")
-        .join(labels.withColumnRenamed("label", "prev"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("prev")).as("label"))
-        .localCheckpoint(true)
-    }
-    labels
-  }
 
   /** Community labels normalized to dense 0..k-1 ranks — the reference
     * does this on the driver with a Python dict UDF (main.py:164-173).
@@ -124,91 +44,6 @@ object Iterative {
     labels.join(dense, "label").select("id", "community")
   }
 
-  /** Fixed-iteration PageRank on the symmetrized graph (GraphX
-    * semantics: rank = resetProb + damping · Σ rank/deg; ranks sum to
-    * ~|V|). One shuffle per round on the contribution aggregation; the
-    * static degree table is computed once and re-joined. */
-  def pageRank(g: Graph, iters: Int = 10, damping: Double = 0.85): DataFrame = {
-    val sym = g.symmetrized.localCheckpoint(true)
-    val deg = sym.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint(true)
-    var ranks = deg.select(col("id"), lit(1.0).as("rank"))
-    for (i <- 1 to iters) {
-      val contribs = sym
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .join(deg.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy("id").agg(sum("c").as("in_rank"))
-      ranks = deg.select("id")
-        .join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(1 - damping) + lit(damping) * coalesce(col("in_rank"), lit(0.0)))
-            .as("rank"))
-      // checkpoint every 3rd round: lineage between checkpoints is flat
-      // (joins against already-materialized sym/deg), and each eager
-      // materialization costs a fixed ~0.5s of scheduling
-      if (i % 3 == 0 || i == iters) ranks = ranks.localCheckpoint(true)
-    }
-    ranks.select(col("id"), round(col("rank"), 6).as("pagerank"))
-  }
-
-  /** Multi-source BFS: exact hop distances from each landmark to every
-    * reachable vertex. Frontier-based — per round only the newly
-    * discovered (landmark, vertex) pairs join against the edge table, so
-    * total work is O(Σ|E| per landmark) spread over diameter rounds.
-    * Basis for closeness centrality and diameter estimation
-    * (ref: nx.closeness_centrality / nx.diameter, main.py:151-155). */
-  def multiSourceBfs(g: Graph, landmarks: DataFrame, maxIter: Int = 30): DataFrame = {
-    val sym = g.symmetrized.localCheckpoint(true)
-    var state = landmarks.select(col("id").as("landmark"), col("id").as("v"),
-      lit(0).as("dist")).localCheckpoint(true)
-    var frontier = state
-    var i = 0
-    while (i < maxIter && !frontier.isEmpty) {
-      val next = frontier
-        .join(sym.withColumnRenamed("src", "v"), "v")
-        .select(col("landmark"), col("dst").as("v"), (col("dist") + 1).as("dist"))
-        .groupBy("landmark", "v").agg(min("dist").as("dist"))
-        .join(state.select("landmark", "v"), Seq("landmark", "v"), "left_anti")
-        .localCheckpoint(true)
-      // state is a union of already-checkpointed frontiers — shallow
-      // lineage, no need to re-materialize the accumulated set per round
-      state = state.union(next)
-      frontier = next
-      i += 1
-    }
-    state
-  }
-
-  /** Personalized PageRank: random walk with restart to the source
-    * vertex (GraphFrames parity: pageRank with sourceId). Same
-    * join+agg iteration as [[pageRank]]; the teleport mass concentrates
-    * on the source instead of spreading uniformly. */
-  def personalizedPageRank(g: Graph, sourceId: Long, iters: Int = 10,
-                           damping: Double = 0.85): DataFrame = {
-    val sym = g.symmetrized.localCheckpoint(true)
-    val deg = sym.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint(true)
-    var ranks = deg.select(col("id"),
-      when(col("id") === sourceId, lit(1.0)).otherwise(lit(0.0)).as("rank"))
-    for (i <- 1 to iters) {
-      val contribs = sym
-        .join(ranks.withColumnRenamed("id", "src"), "src")
-        .join(deg.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy("id").agg(sum("c").as("in_rank"))
-      ranks = deg.select("id")
-        .join(contribs, Seq("id"), "left")
-        .select(col("id"),
-          (when(col("id") === sourceId, lit(1 - damping)).otherwise(lit(0.0))
-            + lit(damping) * coalesce(col("in_rank"), lit(0.0))).as("rank"))
-      if (i % 3 == 0 || i == iters) ranks = ranks.localCheckpoint(true)
-    }
-    ranks.select(col("id"), round(col("rank"), 6).as("ppr"))
-  }
-
-  /** Average shortest-path length estimate over the landmark BFS pairs
-    * (ref: the reference computes exact ASP via NetworkX driver-side). */
   /** Distributed Louvain phase-1 move rounds over the weighted graph
     * (Blondel et al. 2008; synchronous variant à la Sotera's
     * spark-louvain). Init: every vertex its own community. Each round,
@@ -244,7 +79,7 @@ object Iterative {
     * node-strength table (the node universe — every id appears) and
     * total weight m. Self-loops must NOT be in `sym` (a node is never
     * its own neighbor in k_{v,in}) but must be reflected in `strength`
-    * (2× each self-weight) and `m` — the [[louvainTwoLevel]] supergraph
+    * (2× each self-weight) and `m` — the [[louvainTwoLevelFrom]] supergraph
     * convention; for a simple graph this is exactly [[louvainMoves]]. */
   private def moveRounds(sym: DataFrame, strength: DataFrame, m: Long,
       rounds: Int): DataFrame = {
@@ -305,28 +140,23 @@ object Iterative {
     lab.select(col("id"), col("comm").as("community"))
   }
 
-  /** Blondel's FULL Louvain loop, two levels: phase-1 move rounds, then
-    * contract each community to a supernode (inter-community weights
-    * summed; intra-community weight becomes the supernode's self-loop)
-    * and run the same move rounds on the supergraph, mapping the
-    * coarse labels back down. Self-loops enter a supernode's strength
-    * (2× each, the k_v convention) and m, but never k_{v,in} — they
-    * move WITH the node, so they are constant across candidate
-    * communities and must not bias the argmax toward staying.
+  /** Blondel's FULL Louvain loop, two levels, over a PRECOMPUTED
+    * phase-1 labeling ([[louvainMoves]]) — callers that also expose the
+    * phase-1 labels as their own query (the g_louvain / g_louvain2
+    * pair) memoize one move loop for both. Contracts each phase-1
+    * community to a supernode (inter-community weights summed;
+    * intra-community weight becomes the supernode's self-loop), runs
+    * the same move rounds on the supergraph and maps the coarse labels
+    * back down. Self-loops enter a supernode's strength (2× each, the
+    * k_v convention) and m, but never k_{v,in} — they move WITH the
+    * node, so they are constant across candidate communities and must
+    * not bias the argmax toward staying.
     *
     * Scale shape: the contraction is two label joins + one (ca, cb)
     * aggregate — O(|E|); the supergraph is |communities| nodes, so
     * phase-2 rounds cost strictly less than phase-1. Deterministic:
     * same exact-integer gain rule both levels, supernode ids are
     * phase-1 community ids (themselves vertex ids). */
-  def louvainTwoLevel(weightedEdges: DataFrame, rounds1: Int = 4,
-      rounds2: Int = 4): DataFrame =
-    louvainTwoLevelFrom(weightedEdges, louvainMoves(weightedEdges, rounds1),
-      rounds2)
-
-  /** [[louvainTwoLevel]] over a PRECOMPUTED phase-1 labeling — callers
-    * that also expose the phase-1 labels as their own query (the
-    * g_louvain / g_louvain2 pair) memoize one move loop for both. */
   def louvainTwoLevelFrom(weightedEdges: DataFrame, phase1: DataFrame,
       rounds2: Int = 4): DataFrame = {
     val lab1 = phase1.localCheckpoint(true)
@@ -362,6 +192,8 @@ object Iterative {
       .select("id", "community")
   }
 
+  /** Average shortest-path length estimate over the landmark BFS pairs
+    * (ref: the reference computes exact ASP via NetworkX driver-side). */
   def avgPathLength(dists: DataFrame): DataFrame =
     dists.filter(col("dist") > 0)
       .agg(round(avg(col("dist")), 4).as("avg_path_length"))
@@ -370,13 +202,10 @@ object Iterative {
   def topDegreeLandmarks(g: Graph, k: Int): DataFrame =
     g.degrees.orderBy(col("degree").desc, col("id").asc).limit(k).select("id")
 
-  /** Landmark closeness centrality: (reachable-1)/Σdist over the
-    * landmark set — the standard landmark approximation of
-    * nx.closeness_centrality (exact when landmarks = all vertices). */
-  def closeness(g: Graph, numLandmarks: Int = 8): DataFrame =
-    closenessFrom(multiSourceBfs(g, topDegreeLandmarks(g, numLandmarks)))
-
-  /** Closeness from a precomputed (landmark, v, dist) table. */
+  /** Landmark closeness centrality from a precomputed (landmark, v,
+    * dist) table: (reachable-1)/Σdist over the landmark set — the
+    * standard landmark approximation of nx.closeness_centrality (exact
+    * when landmarks = all vertices). */
   def closenessFrom(dists: DataFrame): DataFrame = {
     dists.filter(col("dist") > 0)
       .groupBy(col("v").as("id"))
@@ -644,7 +473,7 @@ object Iterative {
   }
 
   /** Landmark harmonic centrality (nx.harmonic_centrality restricted to
-    * the landmark set, the same approximation family as [[closeness]]):
+    * the landmark set, the same approximation family as [[closenessFrom]]):
     * Σ 1/d(v, landmark). Each term is rounded to 1e-9 micro-units and
     * summed as LONGS — integer sums are order-free, so the total cannot
     * drift with partition merge order (1/3-style terms are inexact in
@@ -697,15 +526,5 @@ object Iterative {
     }
     paths.select(col("v").as("id"), col("dist"), col("path"))
   }
-
-  /** Double-sweep diameter estimate: BFS from the max-degree vertex,
-    * then BFS from the farthest vertex found; the second eccentricity is
-    * a high-quality lower bound (exact on trees). (ref: nx.diameter) */
-  def diameterEstimate(g: Graph): DataFrame = {
-    val first = multiSourceBfs(g, topDegreeLandmarks(g, 1))
-    val far = first.orderBy(col("dist").desc, col("v").asc).limit(1)
-      .select(col("v").as("id"))
-    val second = multiSourceBfs(g, far)
-    second.agg(max("dist").as("diameter_lower_bound"))
-  }
 }
+

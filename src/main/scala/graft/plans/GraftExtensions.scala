@@ -2,8 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
 /** Session-extension entry point: lets a deployment enable the graft
   * SQL surface with configuration alone —
@@ -13,32 +13,9 @@ import graft.functions._
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, name)
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("cosine_sim"), info("cosine_sim"),
-      (es: Seq[Expression]) => CosineSimilarity(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"), info("minhash_sig"),
-      (es: Seq[Expression]) => MinHashSignature(es.head, 128, 42L)))
-    ext.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      (es: Seq[Expression]) => SimHash64(es.head, 42L)))
-    ext.injectFunction((FunctionIdentifier("hyperplane_lsh"), info("hyperplane_lsh"),
-      (es: Seq[Expression]) => HyperplaneLsh(es.head, 48, 42L)))
-    ext.injectFunction((FunctionIdentifier("equal_fraction"), info("equal_fraction"),
-      (es: Seq[Expression]) => EqualFraction(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("jaccard_sorted"), info("jaccard_sorted"),
-      (es: Seq[Expression]) => JaccardSorted(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count"),
-      (es: Seq[Expression]) => SortedLongIntersectCount(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("kth_absent"), info("kth_absent"),
-      (es: Seq[Expression]) => KthAbsent(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("byte_stride"), info("byte_stride"),
-      (es: Seq[Expression]) => ByteStride(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("avg_hash64"), info("avg_hash64"),
-      (es: Seq[Expression]) => AvgHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("n2v_pick"), info("n2v_pick"),
-      (es: Seq[Expression]) => Node2vecPick(es(0), es(1), es(2), es(3))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.all.foreach { case (name, f) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), f))
+    }
 }

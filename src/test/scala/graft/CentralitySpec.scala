@@ -30,13 +30,8 @@ class CentralitySpec extends AnyFunSuite {
     }.filter(p => p._1 != p._2).distinct
   }
 
-  private def undirectedAdj(edges: Seq[(Long, Long)]): Map[Long, Seq[Long]] = {
-    val sym = edges ++ edges.map(e => (e._2, e._1))
-    sym.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
-  }
-
   test("katz matches the driver-side replica on a random graph") {
-    val adj = undirectedAdj(randomEdges)
+    val adj = GraphReplays.adjacency(randomEdges)
     var x = adj.keys.map(_ -> 1.0).toMap
     for (_ <- 1 to 8)
       x = adj.keys.map(v => v -> (1.0 + 0.005 * adj(v).map(x).sum)).toMap
@@ -47,7 +42,7 @@ class CentralitySpec extends AnyFunSuite {
   }
 
   test("eigenvector matches the replica and is uniform on a clique") {
-    val adj = undirectedAdj(randomEdges)
+    val adj = GraphReplays.adjacency(randomEdges)
     // micro-int replica: exactly the engine's integer-grid update
     var q = adj.keys.map(_ -> 1000000L).toMap
     for (_ <- 1 to 8) {
@@ -159,18 +154,8 @@ class CentralitySpec extends AnyFunSuite {
     // every vertex a landmark (the documented opt-in, nx semantics)
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (5L, 6L))
-    val g = graphOf(edges)
-    val adj = undirectedAdj(edges)
-    def bfsDist(s: Long): Map[Long, Int] = {
-      val dist = scala.collection.mutable.Map(s -> 0)
-      val q = scala.collection.mutable.Queue(s)
-      while (q.nonEmpty) {
-        val v = q.dequeue()
-        for (w <- adj(v) if !dist.contains(w)) { dist(w) = dist(v) + 1; q += w }
-      }
-      dist.toMap
-    }
-    val n = adj.size
+    val adj = GraphReplays.adjacency(edges)
+    def bfsDist(s: Long): Map[Long, Int] = GraphReplays.bfsFrom(adj, s)
     val wantClose = adj.keys.map { v =>
       val d = bfsDist(v) - v
       v -> (d.size.toDouble / d.values.sum)
@@ -178,12 +163,14 @@ class CentralitySpec extends AnyFunSuite {
     val wantHarm = adj.keys.map { v =>
       v -> (bfsDist(v) - v).values.map(1.0 / _).sum
     }.toMap
-    val gotClose = graph.Iterative.closeness(g, numLandmarks = n)
-      .as[(Long, Double)].collect().toMap
-    val gotHarm = graph.Iterative.harmonicFrom(
-      graph.Iterative.multiSourceBfs(g,
-        graph.Iterative.topDegreeLandmarks(g, n)))
-      .as[(Long, Double)].collect().toMap
+    // every vertex a landmark, on both sides of the vertex gate
+    val (csr, pregel) = GraphReplays.bothBranches(edges) { g =>
+      val dists = Gx.multiSourceBfs(g, adj.keys.toSeq)
+      (graph.Iterative.closenessFrom(dists).as[(Long, Double)].collect().toMap,
+        graph.Iterative.harmonicFrom(dists).as[(Long, Double)].collect().toMap)
+    }
+    assert(csr == pregel)
+    val (gotClose, gotHarm) = csr
     for (v <- adj.keys) {
       assert(math.abs(gotClose(v) - wantClose(v)) <= 1e-6,
         s"closeness $v: ${gotClose(v)} vs ${wantClose(v)}")

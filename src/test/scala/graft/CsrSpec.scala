@@ -1,5 +1,6 @@
 package graft
 
+import graft.GraphReplays.adjacency
 import graft.graph.Csr
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,11 +26,6 @@ class CsrSpec extends AnyFunSuite {
   private def csrOf(e: Seq[(Long, Long)]): Csr =
     Csr(e.map(_._1).toArray, e.map(_._2).toArray)
 
-  /** Neighbor multiset per vertex: each edge once per direction. */
-  private def adjacency(e: Seq[(Long, Long)]): Map[Long, Seq[Long]] =
-    e.flatMap { case (s, d) => Seq(s -> d, d -> s) }
-      .groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2).sorted }
-
   test("CSR from an edge list: ids ascending, neighbor runs sorted, multiplicity kept") {
     graphs.foreach { e =>
       val c = csrOf(e)
@@ -46,17 +42,7 @@ class CsrSpec extends AnyFunSuite {
   test("label propagation == synchronous replay, smallest label on ties") {
     graphs.foreach { e =>
       val c = csrOf(e)
-      var lab = adjacency(e).keys.map(v => v -> v).toMap
-      for (_ <- 1 to 5) {
-        val votes = e.flatMap { case (s, d) => Seq(d -> lab(s), s -> lab(d)) }
-          .groupBy(_._1)
-        lab = lab.map { case (v, old) =>
-          v -> votes.get(v).map { vs =>
-            val counts = vs.groupBy(_._2).map { case (l, xs) => l -> xs.size }
-            counts.toSeq.minBy { case (l, n) => (-n, l) }._1
-          }.getOrElse(old)
-        }
-      }
+      val lab = GraphReplays.labelPropagation(e, 5)
       val got = Csr.labelPropagation(c, 5)
       assert(c.ids.indices.map(i => c.ids(got(i))) == c.ids.toSeq.map(lab), s"$e")
     }
@@ -69,18 +55,10 @@ class CsrSpec extends AnyFunSuite {
 
   test("components == union-find labelled by min id") {
     graphs.foreach { e =>
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      e.foreach { case (s, d) =>
-        val (a, b) = (find(s), find(d))
-        if (a != b) parent(math.max(a, b)) = math.min(a, b)
-      }
+      val want = GraphReplays.components(e)
       val c = csrOf(e)
       val comp = Csr.components(c)
-      assert(c.ids.indices.map(i => c.ids(comp(i))) == c.ids.toSeq.map(find), s"$e")
+      assert(c.ids.indices.map(i => c.ids(comp(i))) == c.ids.toSeq.map(want), s"$e")
     }
   }
 

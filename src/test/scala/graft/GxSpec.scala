@@ -1,26 +1,32 @@
 package graft
 
+import graft.GraphReplays.{adjacency, bfsFrom, bothBranches}
 import graft.graph.{Graph, GraphBuilder, Gx, Iterative}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The GraphX-backed implementations (Gx) must produce EXACTLY the same
-  * results as the independent DataFrame implementations (Iterative) —
-  * same init, same update rule, same deterministic tie-breaks. These
-  * specs pin that equivalence on both toy graphs and the real
-  * co-purchase graph, so the production path (Gx) inherits the oracle
-  * evidence gathered for the DF path and vice versa.
+/** The production graph algorithms ([[Gx]], [[graph.GxBetweenness]]) —
+  * the broadcast-CSR kernels below the vertex gate, GraphX/Pregel above
+  * it — against driver-side replays written from the edge list
+  * ([[GraphReplays]]): union-find components, synchronous LPA with the
+  * smallest label on ties, fixed-iteration PageRank and PPR, queue BFS
+  * and textbook Brandes from the same md5-ordered sources. The real
+  * co-purchase graph runs on the default (CSR) side; the toy graphs run
+  * on both sides ([[GraphReplays.bothBranches]]). Seven of the older
+  * test names still say "DataFrame": they named the DataFrame
+  * implementations these specs were once compared with, whose
+  * semantics the replays now state.
   */
 class GxSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
 
   private lazy val g = GraphBuilder.coPurchase(spark, sf)
+  private lazy val edges = g.edges.as[(Long, Long)].collect().toSeq
 
   test("Gx connected components == DataFrame large/small-star components") {
     val ours = Gx.connectedComponents(g).as[(Long, Long)].collect().toMap
-    val dfImpl = Iterative.connectedComponents(g).as[(Long, Long)].collect().toMap
-    assert(ours == dfImpl)
+    assert(ours == GraphReplays.components(edges))
   }
 
   test("weighted pagerank with unit weights == unweighted pagerank") {
@@ -71,13 +77,12 @@ class GxSpec extends AnyFunSuite {
 
   test("Gx pagerank == DataFrame pagerank (same fixed-point iteration)") {
     val ours = Gx.pageRank(g, iters = 10).as[(Long, Double)].collect().toMap
-    val dfImpl = Iterative.pageRank(g, iters = 10)
-      .as[(Long, Double)].collect().toMap
-    assert(ours.keySet == dfImpl.keySet)
-    // identical math; only float summation order differs (both round
-    // to 6 decimals, so allow the last digit to wobble)
+    val want = GraphReplays.pageRank(edges, iters = 10)
+    assert(ours.keySet == want.keySet)
+    // identical math; Gx rounds to 6 decimals and sums in another
+    // order, so allow the last digit to wobble
     ours.foreach { case (id, r) =>
-      assert(math.abs(r - dfImpl(id)) <= 1e-6, s"vertex $id: $r vs ${dfImpl(id)}")
+      assert(math.abs(r - want(id)) <= 1e-6, s"vertex $id: $r vs ${want(id)}")
     }
   }
 
@@ -106,11 +111,10 @@ class GxSpec extends AnyFunSuite {
   test("Gx personalized pagerank == DataFrame ppr") {
     val src = Iterative.topDegreeLandmarks(g, 1).head().getLong(0)
     val ours = Gx.personalizedPageRank(g, src).as[(Long, Double)].collect().toMap
-    val dfImpl = Iterative.personalizedPageRank(g, src)
-      .as[(Long, Double)].collect().toMap
-    assert(ours.keySet == dfImpl.keySet)
+    val want = GraphReplays.pageRank(edges, iters = 10, source = Some(src))
+    assert(ours.keySet == want.keySet)
     ours.foreach { case (id, r) =>
-      assert(math.abs(r - dfImpl(id)) <= 1e-6, s"vertex $id: $r vs ${dfImpl(id)}")
+      assert(math.abs(r - want(id)) <= 1e-6, s"vertex $id: $r vs ${want(id)}")
     }
   }
 
@@ -119,37 +123,24 @@ class GxSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     val ours = Gx.multiSourceBfs(g, landmarks)
       .as[(Long, Long, Int)].collect().toSet
-    val dfImpl = Iterative.multiSourceBfs(g, landmarks.toDF("id"))
-      .as[(Long, Long, Int)].collect().toSet
-    assert(ours == dfImpl)
+    val adj = adjacency(edges)
+    val want = landmarks.flatMap(l =>
+      bfsFrom(adj, l).map { case (v, d) => (l, v, d) }).toSet
+    assert(ours == want)
   }
 
   test("Gx label propagation == DataFrame LPA (deterministic tie-break)") {
     val ours = Gx.labelPropagation(g, iters = 5)
       .as[(Long, Long)].collect().toMap
-    val dfImpl = Iterative.labelPropagation(g, maxIter = 5)
-      .as[(Long, Long)].collect().toMap
-    assert(ours == dfImpl)
+    assert(ours == GraphReplays.labelPropagation(edges, 5))
   }
 
   test("exact eccentricities/diameter/closeness == brute-force BFS") {
-    // local queue-BFS oracle over an adjacency map
-    def bfsFrom(adj: Map[Long, Seq[Long]], s: Long): Map[Long, Int] = {
-      val dist = scala.collection.mutable.Map(s -> 0)
-      val q = scala.collection.mutable.Queue(s)
-      while (q.nonEmpty) {
-        val u = q.dequeue()
-        adj.getOrElse(u, Nil).foreach { v =>
-          if (!dist.contains(v)) { dist(v) = dist(u) + 1; q.enqueue(v) }
-        }
-      }
-      dist.toMap
-    }
+    // local queue-BFS oracle over the adjacency
     def check(edges: Seq[(Long, Long)], batchSize: Int): Unit = {
       val e = edges.toDF("src", "dst")
       val gg = Graph(GraphBuilder.vertices(e), e)
-      val adj = (edges ++ edges.map(_.swap)).groupBy(_._1)
-        .map { case (k, vs) => k -> vs.map(_._2) }
+      val adj = adjacency(edges)
       val ids = adj.keys.toSeq
       val all = ids.map(s => s -> bfsFrom(adj, s)).toMap
       val wantEcc = ids.map(s => s -> all(s).values.max.toLong).toMap
@@ -173,12 +164,11 @@ class GxSpec extends AnyFunSuite {
     check(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)), 2)
     check(Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L), (6L, 7L)), 3)
     // the real sf0.001 co-purchase graph against the same local oracle
-    val realEdges = g.edges.as[(Long, Long)].collect().toSeq
-    check(realEdges, 512)
+    check(edges, 512)
     // and the landmark estimate is a lower bound of the exact diameter
     val est = Gx.diameterEstimate(g).head().getInt(0)
     val exact = {
-      val e = realEdges.toDF("src", "dst")
+      val e = edges.toDF("src", "dst")
       val gg = Graph(GraphBuilder.vertices(e), e)
       Gx.exactDiameter(gg).head().getLong(0)
     }
@@ -187,53 +177,33 @@ class GxSpec extends AnyFunSuite {
 
   test("Gx diameter estimate == DataFrame double sweep") {
     val ours = Gx.diameterEstimate(g).head().getInt(0)
-    val dfImpl = Iterative.diameterEstimate(g).head().getInt(0)
-    assert(ours == dfImpl)
+    // BFS from the max-degree vertex (ties: min id), then from the
+    // farthest vertex found (ties: min id); the bound is its eccentricity
+    val adj = adjacency(edges)
+    val lm = adj.keys.minBy(v => (-adj(v).size, v))
+    val far = bfsFrom(adj, lm).toSeq.minBy { case (v, d) => (-d, v) }._1
+    assert(ours == bfsFrom(adj, far).values.max)
   }
 
   test("Gx betweenness == DataFrame Brandes (same seeded uniform sources)") {
     val ours = graph.GxBetweenness.run(g, numSources = 4)
       .as[(Long, Double)].collect().toMap
-    val dfImpl = graph.Betweenness.run(g, numSources = 4)
-      .as[(Long, Double)].collect().toMap
-    assert(ours.keySet == dfImpl.keySet)
+    val ids = g.vertices.as[Long].collect().toSeq
+    val sources = GraphReplays.md5Sources(ids, 4)
+    val (want, _) = GraphReplays.brandes(edges, sources,
+      scale = ids.size / (2.0 * sources.size))
+    assert(ours.keySet == ids.toSet)
     ours.foreach { case (id, b) =>
-      assert(math.abs(b - dfImpl(id)) <= 1e-5, s"vertex $id: $b vs ${dfImpl(id)}")
+      val w = want.getOrElse(id, 0.0)
+      assert(math.abs(b - w) <= 1e-5, s"vertex $id: $b vs $w")
     }
   }
 
   test("exact betweenness == brute-force Brandes on asymmetric graphs") {
     // driver-side reference: textbook Brandes, one BFS per source,
     // backward dependency accumulation, undirected pairs counted once
-    def brute(edges: Seq[(Long, Long)]): Map[Long, Double] = {
-      val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-      val nodes = adj.keySet.toSeq.sorted
-      val bc = scala.collection.mutable.Map[Long, Double]()
-        .withDefaultValue(0.0)
-      for (s <- nodes) {
-        val dist = scala.collection.mutable.Map(s -> 0)
-        val sigma = scala.collection.mutable.Map(s -> 1.0)
-          .withDefaultValue(0.0)
-        val order = scala.collection.mutable.ArrayBuffer[Long]()
-        val queue = scala.collection.mutable.Queue(s)
-        while (queue.nonEmpty) {
-          val v = queue.dequeue(); order += v
-          for (w <- adj(v).toSeq.sorted) {
-            if (!dist.contains(w)) { dist(w) = dist(v) + 1; queue += w }
-            if (dist(w) == dist(v) + 1) sigma(w) += sigma(v)
-          }
-        }
-        val delta = scala.collection.mutable.Map[Long, Double]()
-          .withDefaultValue(0.0)
-        for (w <- order.reverse; v <- adj(w) if dist.contains(v) &&
-            dist(v) == dist(w) - 1) {
-          delta(v) += sigma(v) / sigma(w) * (1.0 + delta(w))
-        }
-        for (v <- nodes if v != s) bc(v) += delta(v)
-      }
-      nodes.map(v => v -> bc(v) / 2.0).toMap
-    }
+    def brute(edges: Seq[(Long, Long)]): Map[Long, Double] =
+      GraphReplays.brandes(edges, adjacency(edges).keys.toSeq)._1
     // kite + tail: no symmetry, mixed degrees — the case sampling gets
     // wrong and exact must not
     val kite = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
@@ -242,17 +212,20 @@ class GxSpec extends AnyFunSuite {
     val k4p = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L))
     for (edges <- Seq(kite, k4p)) {
-      val e = edges.toDF("src", "dst")
-      val gr = graph.Graph(graph.GraphBuilder.vertices(e), e)
       val want = brute(edges)
-      val gx = graph.GxBetweenness.exact(gr).as[(Long, Double)]
-        .collect().toMap
-      val df = graph.Betweenness.run(gr, numSources = want.size)
-        .as[(Long, Double)].collect().toMap
-      assert(gx.keySet == want.keySet)
-      for ((id, w) <- want) {
-        assert(math.abs(gx(id) - w) <= 1e-6, s"gx exact $id: ${gx(id)} vs $w")
-        assert(math.abs(df(id) - w) <= 1e-6, s"df exact $id: ${df(id)} vs $w")
+      // exact, and the estimator with every vertex a source, on both
+      // sides of the vertex gate
+      val (csr, pregel) = bothBranches(edges) { gr =>
+        (graph.GxBetweenness.exact(gr).as[(Long, Double)].collect().toMap,
+          graph.GxBetweenness.run(gr, numSources = want.size)
+            .as[(Long, Double)].collect().toMap)
+      }
+      for (((exact, all), side) <- Seq(csr -> "CSR", pregel -> "Pregel")) {
+        assert(exact.keySet == want.keySet && all.keySet == want.keySet)
+        for ((id, w) <- want) {
+          assert(math.abs(exact(id) - w) <= 1e-6, s"$side exact $id: ${exact(id)} vs $w")
+          assert(math.abs(all(id) - w) <= 1e-6, s"$side all-source $id: ${all(id)} vs $w")
+        }
       }
     }
   }
@@ -260,35 +233,8 @@ class GxSpec extends AnyFunSuite {
   test("edge betweenness matches brute-force Brandes edge dependencies") {
     // driver-side reference: per-source edge dependency
     // σv/σw·(1+δw) for tree edges (v,w) of the BFS DAG, pairs halved
-    def bruteEdges(edges: Seq[(Long, Long)]): Map[(Long, Long), Double] = {
-      val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-      val nodes = adj.keySet.toSeq.sorted
-      val eb = scala.collection.mutable.Map[(Long, Long), Double]()
-        .withDefaultValue(0.0)
-      for (s <- nodes) {
-        val dist = scala.collection.mutable.Map(s -> 0)
-        val sigma = scala.collection.mutable.Map(s -> 1.0).withDefaultValue(0.0)
-        val order = scala.collection.mutable.ArrayBuffer[Long]()
-        val queue = scala.collection.mutable.Queue(s)
-        while (queue.nonEmpty) {
-          val v = queue.dequeue(); order += v
-          for (w <- adj(v).toSeq.sorted) {
-            if (!dist.contains(w)) { dist(w) = dist(v) + 1; queue += w }
-            if (dist(w) == dist(v) + 1) sigma(w) += sigma(v)
-          }
-        }
-        val delta = scala.collection.mutable.Map[Long, Double]()
-          .withDefaultValue(0.0)
-        for (w <- order.reverse; v <- adj(w) if dist.contains(v) &&
-            dist(v) == dist(w) - 1) {
-          val c = sigma(v) / sigma(w) * (1.0 + delta(w))
-          delta(v) += c
-          eb((math.min(v, w), math.max(v, w))) += c
-        }
-      }
-      eb.map { case (k, v) => k -> v / 2.0 }.toMap.withDefaultValue(0.0)
-    }
+    def bruteEdges(edges: Seq[(Long, Long)]): Map[(Long, Long), Double] =
+      GraphReplays.brandes(edges, adjacency(edges).keys.toSeq)._2
     // P3 chain (hand: both edges 2.0), star K1,3 (all 3.0), kite+tail
     val p3 = Seq((1L, 2L), (2L, 3L))
     val star = Seq((10L, 1L), (10L, 2L), (10L, 3L))
@@ -372,25 +318,6 @@ class GxSpec extends AnyFunSuite {
       .as[(Long, Long, Int)].collect().toSet
     assert(d == Set((1L, 1L, 0), (1L, 2L, 1), (1L, 3L, 2),
       (10L, 10L, 0), (10L, 11L, 1)))
-  }
-
-  /** Runs `f` on a fresh toy graph on each side of the vertex gate —
-    * the broadcast-CSR kernels, then the Pregel branch — and returns
-    * both results. Fresh frames per side: the sweep memo keys on them. */
-  private def bothBranches[A](edges: Seq[(Long, Long)],
-                              isolated: Seq[Long] = Nil)(f: Graph => A): (A, A) = {
-    def mk(): Graph = {
-      val e = edges.toDF("src", "dst")
-      val v = GraphBuilder.vertices(e).union(isolated.toDF("id"))
-      Graph(v, e)
-    }
-    val old = Graph.broadcastVertexGate
-    try {
-      Graph.broadcastVertexGate = Long.MaxValue
-      val csr = f(mk())
-      Graph.broadcastVertexGate = 0L
-      (csr, f(mk()))
-    } finally Graph.broadcastVertexGate = old
   }
 
   private def bfsSet(g: Graph, lm: Seq[Long]): Set[(Long, Long, Int)] =
@@ -842,9 +769,7 @@ class GxSpec extends AnyFunSuite {
         .take(4).map(b => f"$b%02x").mkString.take(7)
       java.lang.Long.parseLong(hex, 16) % 100
     }
-    val edges = g.edges.as[(Long, Long)].collect().toSeq
-    val adj = (edges ++ edges.map(_.swap)).groupBy(_._1)
-      .map { case (k, vs) => k -> vs.map(_._2) }
+    val adj = adjacency(edges)
     val degs = adj.map { case (k, vs) => k -> vs.size }
     val seeds = degs.toSeq.sortBy { case (id, d) => (-d, id) }
       .take(4).map(_._1)
@@ -869,17 +794,12 @@ class GxSpec extends AnyFunSuite {
         .take(4).map(b => f"$b%02x").mkString.take(7)
       java.lang.Long.parseLong(hex, 16) % 100
     }
-    val edges = g.edges.as[(Long, Long)].collect().toSeq
-    val adj = (edges ++ edges.map(_.swap)).groupBy(_._1)
-      .map { case (k, vs) => k -> vs.map(_._2) }
+    val adj = adjacency(edges)
     val degs = adj.map { case (k, vs) => k -> vs.size }
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
     val hubSeeds = degs.toSeq.sortBy { case (id, d) => (-d, id) }
       .take(4).map(_._1)
     val rndSeeds = degs.keys.toSeq
-      .sortBy(id => (md5hex(s"seed:$id"), id)).take(4)
+      .sortBy(id => (GraphReplays.md5Hex(s"seed:$id"), id)).take(4)
     def simulate(seeds: Seq[Long]): Long = {
       var infected = seeds.toSet
       var frontier = seeds.toSet
@@ -911,12 +831,7 @@ class GxSpec extends AnyFunSuite {
       val keptV = degs.keySet -- removed
       val kept = edges.filter { case (s, d) =>
         !removed(s) && !removed(d) }
-      val parent = collection.mutable.Map(keptV.toSeq.map(v => v -> v): _*)
-      def find(x: Long): Long =
-        if (parent(x) == x) x
-        else { val r = find(parent(x)); parent(x) = r; r }
-      kept.foreach { case (s, d) => parent(find(s)) = find(d) }
-      val comps = keptV.groupBy(find)
+      val comps = GraphReplays.components(kept, keptV).groupBy(_._2)
       (pct, keptV.size.toLong, comps.size.toLong,
         if (comps.isEmpty) 1L else comps.values.map(_.size).max.toLong)
     }
@@ -937,12 +852,7 @@ class GxSpec extends AnyFunSuite {
         r.getLong(3))).toSeq
     val want = Seq(25, 50, 75).map { p =>
       val kept = edges.filter { case (s, d) => coin(s, d) < p }
-      val parent = collection.mutable.Map(allVs.map(v => v -> v): _*)
-      def find(x: Long): Long =
-        if (parent(x) == x) x
-        else { val r = find(parent(x)); parent(x) = r; r }
-      kept.foreach { case (s, d) => parent(find(s)) = find(d) }
-      val comps = allVs.groupBy(find)
+      val comps = GraphReplays.components(kept, allVs).groupBy(_._2)
       (p, kept.size.toLong, comps.size.toLong,
         comps.values.map(_.size).max.toLong)
     }

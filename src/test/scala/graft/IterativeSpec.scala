@@ -1,21 +1,20 @@
 package graft
 
-import graft.graph.{Graph, GraphBuilder, Iterative}
+import graft.GraphReplays.bothBranches
+import graft.graph.{GraphBuilder, Gx, Iterative}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The DataFrame-iterative algorithms of [[Iterative]] (coloring,
+  * Louvain, Borůvka), and known-answer toy graphs for the production
+  * traversals and rankings of [[Gx]], each run on both sides of the
+  * vertex gate. */
 class IterativeSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
 
   // two components: path 1-2-3-4 and triangle 10-11-12, isolated 20
-  lazy val twoComp = {
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L))
-      .toDF("src", "dst")
-    val v = GraphBuilder.vertices(e)
-      .union(Seq(20L).toDF("id")).distinct()
-    Graph(v, e)
-  }
+  private val twoComp = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L), (10L, 12L))
 
   test("greedy coloring: proper coloring, deterministic, bounded palette") {
     val g = GraphBuilder.coPurchase(spark, sf)
@@ -67,7 +66,7 @@ class IterativeSpec extends AnyFunSuite {
     val we = GraphBuilder.weightedEdges(spark, sf)
       .select($"src", $"dst", $"weight".cast("long").as("weight"))
     val lab1 = Iterative.louvainMoves(we)
-    val lab2 = Iterative.louvainTwoLevel(we)
+    val lab2 = Iterative.louvainTwoLevelFrom(we, lab1)
     // total partition: exactly the phase-1 vertex set, one label each
     assert(lab2.count() == lab1.count())
     assert(lab2.select("id").distinct().count() == lab2.count())
@@ -92,14 +91,16 @@ class IterativeSpec extends AnyFunSuite {
       (3L, 11L, 1L),
       (21L, 22L, 30L))
       .toDF("src", "dst", "weight")
-    val lab = Iterative.louvainTwoLevel(we).as[(Long, Long)].collect().toMap
+    def twoLevel(): Map[Long, Long] =
+      Iterative.louvainTwoLevelFrom(we, Iterative.louvainMoves(we))
+        .as[(Long, Long)].collect().toMap
+    val lab = twoLevel()
     assert(lab.keySet == Set(1L, 2L, 3L, 11L, 12L, 13L, 21L, 22L))
     assert(Set(lab(1L), lab(2L), lab(3L)).size == 1, "triangle A split")
     assert(Set(lab(11L), lab(12L), lab(13L)).size == 1, "triangle B split")
     assert(lab(21L) == lab(22L), "heavy pair split")
     assert(lab(1L) != lab(21L), "disconnected groups merged")
-    val again = Iterative.louvainTwoLevel(we).as[(Long, Long)].collect().toMap
-    assert(lab == again)
+    assert(lab == twoLevel())
   }
 
   test("boruvka msf: toy graph yields the hand-computed spanning tree") {
@@ -155,53 +156,62 @@ class IterativeSpec extends AnyFunSuite {
   }
 
   test("connected components finds both components and isolated vertex") {
-    val cc = Iterative.connectedComponents(twoComp)
-      .as[(Long, Long)].collect().toMap
-    assert(cc == Map(1L -> 1, 2L -> 1, 3L -> 1, 4L -> 1,
-      10L -> 10, 11L -> 10, 12L -> 10, 20L -> 20))
+    // Gx gives a row only to every vertex with an edge: the isolated
+    // vertex 20 is a vertex of the graph but has no component row
+    val (csr, pregel) = bothBranches(twoComp, isolated = Seq(20L))(
+      Gx.connectedComponents(_).as[(Long, Long)].collect().toMap)
+    assert(csr == pregel)
+    assert(csr == Map(1L -> 1, 2L -> 1, 3L -> 1, 4L -> 1,
+      10L -> 10, 11L -> 10, 12L -> 10))
+    assert(csr == GraphReplays.components(twoComp))
   }
 
   test("label propagation labels are vertex ids and separate far components") {
-    val labels = Iterative.labelPropagation(twoComp, maxIter = 3)
-      .as[(Long, Long)].collect().toMap
-    val ids = twoComp.vertices.as[Long].collect().toSet
+    val (labels, pregel) = bothBranches(twoComp, isolated = Seq(20L))(
+      Gx.labelPropagation(_, iters = 3).as[(Long, Long)].collect().toMap)
+    assert(labels == pregel)
+    // every vertex with an edge has a label; the isolated 20 has none
+    val ids = twoComp.flatMap { case (s, d) => Seq(s, d) }.toSet
     assert(labels.keySet == ids)
     assert(labels.values.toSet.subsetOf(ids))
     // triangle and path can never share a label (disconnected)
     assert((Set(10L, 11L, 12L).map(labels) intersect Set(1L, 2L, 3L, 4L).map(labels)).isEmpty)
+    assert(labels == GraphReplays.labelPropagation(twoComp, 3))
   }
 
   test("pagerank sums to ~|V| and ranks hub highest") {
     // star: 1 connected to 2..5
-    val e = Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L)).toDF("src", "dst")
-    val g = Graph(GraphBuilder.vertices(e), e)
-    val pr = Iterative.pageRank(g, iters = 20).as[(Long, Double)].collect().toMap
+    val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L))
+    val (pr, pregel) = bothBranches(star)(
+      Gx.pageRank(_, iters = 20).as[(Long, Double)].collect().toMap)
+    assert(pr == pregel)
     assert(math.abs(pr.values.sum - 5.0) < 0.01)
     assert(pr(1L) > pr(2L) && math.abs(pr(2L) - pr(5L)) < 1e-6)
+    val want = GraphReplays.pageRank(star, iters = 20)
+    pr.foreach { case (id, r) => assert(math.abs(r - want(id)) <= 1e-6, s"vertex $id") }
   }
 
   test("multi-source BFS distances on path graph") {
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-    val g = Graph(GraphBuilder.vertices(e), e)
-    val d = Iterative.multiSourceBfs(g, Seq(1L).toDF("id"))
-      .select("v", "dist").as[(Long, Int)].collect().toMap
+    val (d, pregel) = bothBranches(Seq((1L, 2L), (2L, 3L), (3L, 4L)))(
+      Gx.multiSourceBfs(_, Seq(1L)).select("v", "dist").as[(Long, Int)].collect().toMap)
+    assert(d == pregel)
     assert(d == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
   }
 
   test("closeness exact on path graph with all-vertex landmarks") {
-    val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val g = Graph(GraphBuilder.vertices(e), e)
-    val c = Iterative.closeness(g, numLandmarks = 3)
-      .as[(Long, Double)].collect().toMap
+    val (c, pregel) = bothBranches(Seq((1L, 2L), (2L, 3L)))(g =>
+      Iterative.closenessFrom(Gx.multiSourceBfs(g, Seq(1L, 2L, 3L)))
+        .as[(Long, Double)].collect().toMap)
+    assert(c == pregel)
     // vertex 2: (3-1)/(1+1) = 1.0 ; vertices 1,3: 2/3
     assert(math.abs(c(2L) - 1.0) < 1e-6)
     assert(math.abs(c(1L) - 2.0 / 3) < 1e-6)
   }
 
   test("diameter estimate exact on path graph") {
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
-    val g = Graph(GraphBuilder.vertices(e), e)
-    assert(Iterative.diameterEstimate(g).as[Int].head() == 4)
+    val (d, pregel) = bothBranches(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)))(
+      Gx.diameterEstimate(_).as[Int].head())
+    assert(d == 4 && pregel == 4)
   }
 
   test("normalizeLabels produces dense 0..k-1") {

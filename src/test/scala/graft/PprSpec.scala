@@ -1,6 +1,7 @@
 package graft
 
-import graft.graph.{Graph, GraphBuilder, Iterative}
+import graft.GraphReplays.bothBranches
+import graft.graph.{Graph, GraphBuilder, Gx, Iterative}
 import org.scalatest.funsuite.AnyFunSuite
 
 class PprSpec extends AnyFunSuite {
@@ -9,10 +10,10 @@ class PprSpec extends AnyFunSuite {
 
   test("personalized pagerank concentrates mass near the source") {
     // path 1-2-3-4-5, source 1: rank decays with distance from source
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
-    val g = Graph(GraphBuilder.vertices(e), e)
-    val pr = Iterative.personalizedPageRank(g, sourceId = 1L, iters = 20)
-      .as[(Long, Double)].collect().toMap
+    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
+    val (pr, pregel) = bothBranches(path)(Gx.personalizedPageRank(_, 1L, iters = 20)
+      .as[(Long, Double)].collect().toMap)
+    assert(pr == pregel)
     // mass decays with distance from the source (the source's sole
     // neighbor may out-rank the source itself — it receives ALL of the
     // source's outflow — so compare across distance bands)
@@ -21,6 +22,8 @@ class PprSpec extends AnyFunSuite {
     assert(pr(1L) + pr(2L) > pr(4L) + pr(5L))
     // total mass bounded by 1 (walk-with-restart distribution)
     assert(pr.values.sum <= 1.0 + 1e-6)
+    val want = GraphReplays.pageRank(path, iters = 20, source = Some(1L))
+    pr.foreach { case (id, r) => assert(math.abs(r - want(id)) <= 1e-6, s"vertex $id") }
   }
 
   test("parallel PPR slot-matches independent single-source runs") {
@@ -38,11 +41,10 @@ class PprSpec extends AnyFunSuite {
   }
 
   test("avg path length exact on path graph with all-vertex landmarks") {
-    val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val g = Graph(GraphBuilder.vertices(e), e)
-    val d = Iterative.multiSourceBfs(g, g.vertices)
+    val (a, pregel) = bothBranches(Seq((1L, 2L), (2L, 3L)))(g =>
+      Iterative.avgPathLength(Gx.multiSourceBfs(g, Seq(1L, 2L, 3L))).as[Double].head())
+    assert(a == pregel)
     // pairs: (1,2)=1 (1,3)=2 (2,3)=1 both directions → avg = 4/3
-    val a = Iterative.avgPathLength(d).as[Double].head()
     assert(math.abs(a - 4.0 / 3.0) < 1e-3)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.HashColumns
-import graft.graph.{Graph, GraphBuilder, Iterative}
+import graft.graph.{Graph, GraphBuilder, Gx, Iterative}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -218,24 +218,14 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("connected components match brute-force union-find on random graphs") {
+    // both sides of the vertex gate: the CSR kernel and GraphX's CC
     forAllN(edgeGen) { edges =>
       if (edges.nonEmpty) {
-        val g = Graph(GraphBuilder.vertices(edges.toDF("src", "dst")),
-          edges.toDF("src", "dst"))
-        val got = Iterative.connectedComponents(g)
-          .as[(Long, Long)].collect().toMap
-        // brute-force union-find
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        edges.foreach { case (a, b) =>
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val want = parent.keys.map(v => v -> find(v)).toMap
-        assert(got == want, s"edges=$edges")
+        val (csr, pregel) = GraphReplays.bothBranches(edges)(
+          Gx.connectedComponents(_).as[(Long, Long)].collect().toMap)
+        val want = GraphReplays.components(edges)
+        assert(csr == want, s"CSR branch, edges=$edges")
+        assert(pregel == want, s"Pregel branch, edges=$edges")
       }
     }
   }

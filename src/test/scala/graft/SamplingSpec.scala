@@ -1,6 +1,7 @@
 package graft
 
-import graft.graph.{Betweenness, CommunitySample, Graph, GraphBuilder, GraphQueries}
+import graft.GraphReplays.bothBranches
+import graft.graph.{CommunitySample, Graph, GraphBuilder, GraphQueries, GxBetweenness}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,18 +10,18 @@ class SamplingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("betweenness exact on path graph (sources = all vertices)") {
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-    val g = Graph(GraphBuilder.vertices(e), e)
-    val bc = Betweenness.run(g, numSources = 4).as[(Long, Double)].collect().toMap
+    val (bc, pregel) = bothBranches(Seq((1L, 2L), (2L, 3L), (3L, 4L)))(
+      GxBetweenness.run(_, numSources = 4).as[(Long, Double)].collect().toMap)
+    assert(bc == pregel)
     // path 1-2-3-4: bc(2)=bc(3)=2 pairs through each; ends 0
     assert(bc(1L) == 0.0 && bc(4L) == 0.0)
     assert(bc(2L) == 2.0 && bc(3L) == 2.0)
   }
 
   test("betweenness exact on star graph") {
-    val e = Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L)).toDF("src", "dst")
-    val g = Graph(GraphBuilder.vertices(e), e)
-    val bc = Betweenness.run(g, numSources = 5).as[(Long, Double)].collect().toMap
+    val (bc, pregel) = bothBranches(Seq((1L, 2L), (1L, 3L), (1L, 4L), (1L, 5L)))(
+      GxBetweenness.run(_, numSources = 5).as[(Long, Double)].collect().toMap)
+    assert(bc == pregel)
     assert(bc(1L) == 6.0) // C(4,2) pairs all route through hub
     assert(bc(2L) == 0.0)
   }

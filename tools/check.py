@@ -62,6 +62,14 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def read_output(d: str) -> pd.DataFrame:
+    """One graft.Verify output directory as a normalized frame (empty
+    when it holds no parquet file)."""
+    files = glob.glob(os.path.join(d, "*.parquet"))
+    return norm(pd.concat([pd.read_parquet(f) for f in files])) if files \
+        else pd.DataFrame()
+
+
 def main(sf_dir: str, out_dir: str) -> int:
     con = duckdb.connect()
     for t in TABLES:
@@ -81,9 +89,7 @@ def main(sf_dir: str, out_dir: str) -> int:
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
             continue
-        files = glob.glob(os.path.join(d, "*.parquet"))
-        got = norm(pd.concat([pd.read_parquet(f) for f in files])) if files \
-            else pd.DataFrame()
+        got = read_output(d)
         if name not in oracle:
             print(f"[rows-only] {name}: {len(got)} rows "
                   f"{'OK' if len(got) > 0 else 'EMPTY!'}")
