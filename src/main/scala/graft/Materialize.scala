@@ -18,7 +18,17 @@ import org.apache.spark.storage.StorageLevel
 object Materialize {
   def table(df: DataFrame,
             level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
-    tableWithHandle(df, level)._1
+    build(df, level)._1
+
+  /** Like [[table]], but ALSO returns the row count the build's
+    * count() computed, so a reader that needs the size costs no
+    * second job. */
+  def tableWithCount(df: DataFrame,
+            level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
+      : (DataFrame, Long) = {
+    val (leaf, _, n) = build(df, level)
+    (leaf, n)
+  }
 
   /** Like [[table]], but ALSO returns the persisted handle — the frame
     * whose plan still matches the CacheManager entry. Loops that
@@ -30,9 +40,16 @@ object Materialize {
   def tableWithHandle(df: DataFrame,
             level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
       : (DataFrame, DataFrame) = {
+    val (leaf, cached, _) = build(df, level)
+    (leaf, cached)
+  }
+
+  /** persist → count → flatten: (leaf, persisted handle, row count). */
+  private def build(df: DataFrame, level: StorageLevel)
+      : (DataFrame, DataFrame, Long) = {
     val cached = df.persist(level)
-    cached.count()
-    (org.apache.spark.sql.graft.Bridge.flatten(cached), cached)
+    val n = cached.count()
+    (org.apache.spark.sql.graft.Bridge.flatten(cached), cached, n)
   }
 
   /** Query-LOCAL materialization scope, for intermediates that are
@@ -52,10 +69,9 @@ object Materialize {
       scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     def table(df: DataFrame): DataFrame = {
-      val cached = df.persist(level)
-      cached.count()
+      val (leaf, cached, _) = build(df, level)
       acquired += cached
-      org.apache.spark.sql.graft.Bridge.flatten(cached)
+      leaf
     }
 
     def seal(result: DataFrame): DataFrame = {

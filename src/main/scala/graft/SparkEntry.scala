@@ -1522,9 +1522,10 @@ object SparkEntry {
 
   /** Oracle for IVF ANN: the k-means-lite coarse quantizer is unrolled
     * Lloyd iterations in SQL. Portability hinges on
-    * `Ann.kmeansCentroids` rounding each round's means to 6dp before
-    * the float cast — double summation-order noise (~1e-15) vanishes,
-    * so centroids (and hence assignments, probes and rankings, whose
+    * `Ann.kmeansCentroids` taking each round's means from exact
+    * micro-int sums, rounded at scale 0 (`round(S/n)/1e6`) before the
+    * float cast — no summation-order noise exists to begin with, so
+    * centroids (and hence assignments, probes and rankings, whose
     * decision gaps are far wider than the residual ~1e-14 cosine
     * noise) are engine-identical. Cosines are manual double arithmetic
     * (the d_embedding_neardup precedent), tie-breaks mirror the Spark

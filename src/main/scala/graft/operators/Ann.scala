@@ -1,12 +1,15 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.CosineSimilarity
 import graft.functions.CosineSimilarity.cosineSim
 import graft.functions.TopKByScore.topK
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Similarity search over the embedding column.
   *
@@ -45,6 +48,16 @@ object Ann {
     * DuckDB rounds the binary value (down). */
   private[graft] def micro(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     round(c.cast("double") * 1e6).cast("long")
+
+  /** [[micro]] on the driver or in a task: the same double product,
+    * rounded half away from zero as Spark's round() rounds a finite
+    * double at scale 0 (AnnSpec pins it equal to [[micro]]). */
+  private[graft] def microOf(f: Float): Long = roundHalfAway(f.toDouble * 1e6)
+
+  /** Half away from zero, exact for every finite double (floor(d + 0.5)
+    * is not: 0.49999999999999994 + 0.5 rounds up to 1.0). */
+  private def roundHalfAway(d: Double): Long =
+    if (d < 0) -Math.round(-d) else Math.round(d)
 
   /** Exact cosine top-k. Output: (query_id, rank, neighbor_id, sim). */
   /** Per-label mean embedding (class centroids — the aggregation step
@@ -291,97 +304,165 @@ object Ann {
         round(col("nn.score"), 6).as("sim"))
   }
 
-  /** K-means-lite centroids: deterministic init (first `cells` vectors),
-    * `iters` Lloyd rounds, all DataFrame algebra (posexplode + per-
-    * dimension mean). Returns (cell, centroid: array<float>).
+  /** K-means-lite coarse quantizer: deterministic init (the vectors
+    * with vec_id < `cells`, cell = vec_id), then `iters` Lloyd rounds
+    * ([[lloydRound]], one Spark job each). Returns a local table
+    * (cell, centroid: array<float>), sorted by cell.
     *
-    * Each round's mean is rounded to 6dp before the float cast: double
-    * summation order differs across partial-agg orders and engines in
-    * the last ulp, and rounding pins every centroid — hence every
-    * assignment, probe and neighbor ranking — to values any engine
-    * reproduces, which is what makes e_knn_ivf DuckDB-oracle-checkable
-    * (same move as the portable MinHash/SimHash/walk pipelines). */
-  def kmeansCentroids(emb: DataFrame, cells: Int = 16, iters: Int = 3): DataFrame = {
-    var centroids = emb.filter(col("vec_id") < cells)
-      .select(col("vec_id").cast("int").as("cell"), col("embedding").as("centroid"))
-    // r11: each Lloyd round collects the (k·d tiny — the kmeansIterate
-    // convention) centroid table to the driver and fuses assignment
-    // into the mean pass as a row-local greatest(struct(sim, cell))
-    // over centroid LITERALS: the per-round |emb|·cells assignment
-    // shuffle and the assigned⋈emb re-join are gone — one corpus scan
-    // and one exploded-dimension aggregate per round. Identical math:
-    // same cosineSim inputs, same (sim, cell) max, same micro-mean.
-    // Gated on `cells` (literal expression width); a wide coarse
-    // quantizer keeps the broadcast-join path.
-    if (cells <= LiteralAssignMaxCells) {
-      for (_ <- 1 to iters) {
-        val cents = centroids.select("cell", "centroid").collect()
-          .map(r => (r.getInt(0), r.getSeq[Float](1)))
-        centroids = emb
-          // two selects — see the pqCodebooks note on generator
-          // extraction vs struct getField
-          .select(bestCellLiteral(cents, col("embedding")).as("cell"),
-            col("embedding"))
-          .select(col("cell"),
-            posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy("cell", "pos")
-          .agg((round(sum(micro(col("x"))) / (count(lit(1)) * 1.0)).cast("long")
-            / 1e6).as("m"))
-          .groupBy("cell")
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-            s => s.getField("m").cast("float")).as("centroid"))
-      }
-    } else {
-      for (_ <- 1 to iters) {
-        val assigned = assignCells(emb, centroids)
-        centroids = assigned
-          .join(emb, "vec_id")
-          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy("cell", "pos")
-          .agg((round(sum(micro(col("x"))) / (count(lit(1)) * 1.0)).cast("long")
-            / 1e6).as("m"))
-          .groupBy("cell")
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-            s => s.getField("m").cast("float")).as("centroid"))
-      }
-    }
-    centroids
+    * Each round's means are micro-int sums rounded at scale 0 and
+    * pinned through float (see [[micro]]): the sums are exact and
+    * order-free, so every centroid — hence every assignment, probe and
+    * neighbor ranking — is the value any engine reproduces, which is
+    * what makes e_knn_ivf DuckDB-oracle-checkable (the oracle runs the
+    * same rounds as SQL aggregates). */
+  def kmeansCentroids(emb: DataFrame, cells: Int = 16, iters: Int = 3): DataFrame =
+    centroidTable(emb.sparkSession, trainCentroids(emb, cells, iters))
+
+  /** [[kmeansCentroids]] on the driver: (cell, centroid) sorted by cell. */
+  private def trainCentroids(emb: DataFrame, cells: Int, iters: Int)
+      : Array[(Int, Array[Float])] = {
+    var cents = emb.filter(col("vec_id") < cells && col("embedding").isNotNull)
+      .select(col("vec_id").cast("int"), col("embedding")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
+      .sortBy(_._1)
+    val vecs = org.apache.spark.sql.graft.Bridge.internalRows(
+      emb.select(col("embedding")))
+    for (_ <- 1 to iters if cents.nonEmpty) cents = lloydRound(vecs, cents)
+    cents
   }
 
-  /** Cell counts up to which nearest-centroid assignment runs as ONE
-    * row-local greatest(struct) expression over collected centroid
-    * literals (zero shuffle — the [[graft.streaming.EventStreams]]
-    * semantic-probe pattern). Wider quantizers keep the broadcast
-    * crossJoin + max aggregation, whose cost is a |corpus|·cells
-    * shuffle but whose expression size is O(1). */
+  /** One Lloyd round as ONE Spark job. The centroid array is broadcast;
+    * each task assigns every vector to its nearest centroid — largest
+    * (cosine, cell), so ties go to the larger cell — and adds the
+    * vector's [[microOf]] elements into per-(cell, position) sums and
+    * counts ([[CellSums]]); the driver adds the tasks' arrays and takes
+    * the means. A cell that loses every member drops out. Per task the
+    * state is cells·dim longs, whatever the corpus size. */
+  private def lloydRound(vecs: RDD[InternalRow], cents: Array[(Int, Array[Float])])
+      : Array[(Int, Array[Float])] = {
+    // slot = rank of the cell id, so comparing slots compares cells and
+    // duplicate init ids share one slot
+    val ids = cents.map(_._1).distinct.sorted
+    val slots = cents.map(c => java.util.Arrays.binarySearch(ids, c._1))
+    val bc = vecs.sparkContext.broadcast(cents.map(_._2))
+    val total = vecs.mapPartitions { rows =>
+      val cs = bc.value.map(ArrayData.toArrayData)
+      val acc = new CellSums(ids.length)
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val x = r.getArray(0)
+          var best = 0
+          var bestSim = CosineSimilarity.compute(x, cs(0))
+          var j = 1
+          while (j < cs.length) {
+            val s = CosineSimilarity.compute(x, cs(j))
+            val c = SQLOrderingUtil.compareDoubles(s, bestSim)
+            if (c > 0 || (c == 0 && slots(j) > slots(best))) {
+              best = j
+              bestSim = s
+            }
+            j += 1
+          }
+          acc.add(slots(best), x)
+        }
+      }
+      Iterator.single(acc)
+    }.reduce(_ merge _)
+    bc.destroy()
+    ids.indices.filter(c => total.sums(c).nonEmpty).map { c =>
+      (ids(c), Array.tabulate[Float](total.sums(c).length)(i =>
+        (roundHalfAway(total.sums(c)(i).toDouble / total.counts(c)(i).toDouble)
+          / 1e6).toFloat))
+    }.toArray
+  }
+
+  /** Per-(cell, position) micro-int sums and member counts of one Lloyd
+    * round. A cell's arrays grow to its longest member, so a position
+    * counts only the members that have it, as a per-(cell, pos) group
+    * does. Sums stay below 2⁶³ for any corpus under ~10¹² unit-scale
+    * vectors. */
+  private final class CellSums(cells: Int) extends Serializable {
+    val sums: Array[Array[Long]] = Array.fill(cells)(Array.emptyLongArray)
+    val counts: Array[Array[Long]] = Array.fill(cells)(Array.emptyLongArray)
+
+    private def grow(c: Int, len: Int): Unit =
+      if (sums(c).length < len) {
+        sums(c) = java.util.Arrays.copyOf(sums(c), len)
+        counts(c) = java.util.Arrays.copyOf(counts(c), len)
+      }
+
+    def add(c: Int, x: ArrayData): Unit = {
+      val n = x.numElements()
+      grow(c, n)
+      var i = 0
+      while (i < n) {
+        sums(c)(i) += microOf(x.getFloat(i))
+        counts(c)(i) += 1L
+        i += 1
+      }
+    }
+
+    def merge(o: CellSums): CellSums = {
+      for (c <- sums.indices) {
+        grow(c, o.sums(c).length)
+        for (i <- o.sums(c).indices) {
+          sums(c)(i) += o.sums(c)(i)
+          counts(c)(i) += o.counts(c)(i)
+        }
+      }
+      this
+    }
+  }
+
+  private def centroidTable(spark: SparkSession,
+                            cents: Array[(Int, Array[Float])]): DataFrame = {
+    import spark.implicits._
+    cents.toSeq.toDF("cell", "centroid")
+  }
+
+  /** Cell counts up to which nearest-centroid assignment ([[assignCells]]
+    * and the [[ivfIndex]] member build) runs as ONE row-local
+    * greatest(struct) expression over centroid literals (zero shuffle —
+    * the [[graft.streaming.EventStreams]] semantic-probe pattern); PQ
+    * code assignment gates on codebook entries the same way. Wider
+    * quantizers keep the broadcast crossJoin + max aggregation, whose
+    * cost is a |corpus|·cells shuffle but whose expression size is
+    * O(1). */
   @volatile private[graft] var LiteralAssignMaxCells = 256
 
   private def bestCellLiteral(cents: Array[(Int, Seq[Float])],
                               emb: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
-    if (cents.length == 1) lit(cents.head._1)
+    if (cents.isEmpty) lit(null).cast("int")
+    else if (cents.length == 1) lit(cents.head._1)
     else greatest(cents.map { case (c, v) =>
       struct(cosineSim(emb, typedLit(v)).as("sim"), lit(c).as("cell"))
     }.toIndexedSeq: _*).getField("cell")
+
+  /** (vec_id, cell, `carry`…): every vector of `emb` with its nearest
+    * centroid's cell, by the row-local literal pick. No centroid, no
+    * row. */
+  private def literalCells(emb: DataFrame, cents: Array[(Int, Seq[Float])],
+                           carry: Seq[String]): DataFrame =
+    emb.where(lit(cents.nonEmpty))
+      .select(col("vec_id") +: bestCellLiteral(cents, col("embedding")).as("cell")
+        +: carry.map(col): _*)
 
   /** Nearest-centroid assignment: (vec_id, cell). Same (sim, cell)
     * struct-max semantics on both paths; the literal path (bounded
     * cell count — every shipped index: 16) is map-side with NO
     * aggregation, so an assignment over N vectors is one scan. */
   def assignCells(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    // count-gate FIRST (r12, VERDICT r11 #5): the gate used to collect()
-    // the full centroid table before deciding — a 2^16-cell quantizer
-    // would ship ~tens of MB to the driver only to discard them and
-    // take the broadcast path. limit(gate+1).count() answers the gate
-    // with a cheap action; rows are collected only when the literal
-    // path is actually taken.
+    // count-gate FIRST: collecting the centroid table to decide would
+    // ship a 2^16-cell quantizer (~tens of MB) to the driver only to
+    // discard it for the broadcast path. limit(gate+1).count() answers
+    // the gate with a cheap action; rows are collected only when the
+    // literal path is taken.
     val nCells = centroids.limit(LiteralAssignMaxCells + 1).count()
-    if (nCells > 0 && nCells <= LiteralAssignMaxCells) {
-      val cents = centroids.select("cell", "centroid").collect()
-        .map(r => (r.getInt(0), r.getSeq[Float](1)))
-      emb.select(col("vec_id"),
-        bestCellLiteral(cents, col("embedding")).as("cell"))
-    } else
+    if (nCells <= LiteralAssignMaxCells)
+      literalCells(emb, centroids.select("cell", "centroid").collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1))), Nil)
+    else
       emb.crossJoin(broadcast(centroids))
         .select(col("vec_id"),
           struct(cosineSim(col("embedding"), col("centroid")).as("sim"),
@@ -391,45 +472,38 @@ object Ann {
         .select(col("vec_id"), col("best.cell").as("cell"))
   }
 
-  /** One trained IVF index per (session, dir): the persisted embedding
-    * table, converged centroids, cell assignments AND the cell-keyed
-    * member table (vec_id, cell, embedding, label) are shared by
-    * [[knnIvf]] and [[semanticDedup]] — training runs once no matter
-    * how many consumers probe it (same memoization pattern as
-    * GraphBuilder's graph caches).
+  /** One trained IVF index per (session, dir): the embedding scan, the
+    * converged centroids (a local table), the cell assignments and the
+    * cell-keyed member table (vec_id, cell, embedding, label, …) —
+    * shared by [[knnIvf]], [[knnFilteredIvf]], [[knnGraph]],
+    * [[semanticDedup]], [[cellSizes]], the probe sweeps and the IVF-PQ
+    * index, so training runs once however many consumers probe it.
     *
-    * r11 (optimization): centroids/assigned/members are
-    * [[graft.Materialize.table]] PLAN LEAVES, not raw persists — the
-    * raw-persist memo embedded the 3-round Lloyd lineage in every
-    * consumer's logical plan (e_knn_ivf planned at ~1.8k formatted
-    * lines; Catalyst re-canonicalized the training DAG per action —
-    * the round-7 nested-memo stall, see Materialize). `members` is the
-    * materialized inverted index: every consumer used to re-join
-    * assigned⋈emb per query — one corpus-scale shuffle each for
-    * knnIvf / knnFilteredIvf / knnGraph / semanticDedup /
-    * ivfProbeSweep; at 100 TB this table IS the stored cell-keyed IVF
-    * layout ([[AnnIndex]] persists exactly it), built once. */
+    * `members` is the ONE persisted table, a [[graft.Materialize.table]]
+    * plan leaf (a raw persist would embed the build's lineage in every
+    * consumer plan — the nested-memo stall, see Materialize). It is the
+    * inverted index: at 100 TB this table IS the stored cell-keyed IVF
+    * layout ([[AnnIndex]] persists exactly it). `assigned` is its
+    * (vec_id, cell) projection. The corpus is not pinned: training reads
+    * it once per Lloyd round and the member build once more, and the
+    * only later emb readers are the vec_id < nQueries query slices. */
   private val ivfCache =
     scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame, DataFrame, DataFrame)]
 
   private[graft] def ivfIndex(spark: SparkSession, dir: String,
                        cells: Int = 16): (DataFrame, DataFrame, DataFrame, DataFrame) =
     ivfCache.getOrElseUpdate(s"${graft.GraftSession.sessionKey(spark, dir)}#$cells", {
-      // pin the corpus ONLY for the multi-pass build (Lloyd rounds +
-      // assignment + the member join ≈ 5 scans), then release it (r12,
-      // VERDICT r11 #4): `members` embeds the embeddings again, so
-      // keeping both pinned held ~2× the corpus in storage memory for
-      // the session — the documented eviction pressure that degraded a
-      // flat leaf 2.3 s → 110 s late in a bench session. After the
-      // build the only emb readers are the vec_id<nQueries query
-      // slices, which read the parquet scan directly.
       val emb = Tables(spark, dir).embeddings
-      emb.persist(StorageLevel.MEMORY_AND_DISK)
-      val centroids = graft.Materialize.table(kmeansCentroids(emb, cells))
-      val assigned = graft.Materialize.table(assignCells(emb, centroids))
-      val members = graft.Materialize.table(assigned.join(emb, "vec_id"))
-      emb.unpersist(blocking = false)
-      (emb, centroids, assigned, members)
+      val cents = trainCentroids(emb, cells, iters = 3)
+      val centroids = centroidTable(spark, cents)
+      // same columns, in the same order, as assigned.join(emb, "vec_id")
+      val carry = emb.columns.filter(_ != "vec_id").toSeq
+      val members = graft.Materialize.table(
+        if (cents.length <= LiteralAssignMaxCells)
+          literalCells(emb, cents.map { case (c, v) => (c, v.toSeq) }, carry)
+        else
+          assignCells(emb, centroids).join(emb, "vec_id"))
+      (emb, centroids, members.select("vec_id", "cell"), members)
     })
 
   /** IVF ANN: probe the `nProbe` nearest cells per query.
@@ -734,13 +808,11 @@ object Ann {
     var cb = subvecs.filter(col("vec_id") < codes)
       .select(col("m"), col("vec_id").cast("int").as("code"),
         col("sv").as("centroid"))
-    // r11: same fusion as the kmeansCentroids rounds — each iteration
-    // collects the (m·codes tiny) codebook WITH its micro longs
-    // (through Spark's own micro(), so no driver re-implementation of
-    // the rounding) and assigns codes as a row-local least(struct)
-    // over literals, feeding the mean pass directly: the per-round
-    // |corpus|·codes argmin shuffle and the assigned⋈subvecs re-join
-    // are gone. Gated on m·codes (expression width).
+    // each iteration collects the (m·codes tiny) codebook WITH its
+    // micro longs (through Spark's own micro()) and assigns codes as a
+    // row-local least(struct) over literals, feeding the mean pass
+    // directly: no per-round |corpus|·codes argmin shuffle and no
+    // assigned⋈subvecs re-join. Gated on m·codes (expression width).
     if (m * codes <= LiteralAssignMaxCells) {
       for (_ <- 1 to iters) {
         val lits = collectCodebookMicro(cb)
@@ -1233,9 +1305,6 @@ object Ann {
     }
     m
   }
-
-  private def roundHalfAway(x: Double): Long =
-    if (x >= 0) math.floor(x + 0.5).toLong else math.ceil(x - 0.5).toLong
 
   /** Fixed-round power iteration on the embedding covariance: the
     * direction and Rayleigh-style eigenvalue estimate after exactly 8

@@ -63,16 +63,20 @@ object AnnIndex {
     // ALL input columns ride into the vectors table (r11): metadata
     // like `label` persists next to each member, which is what makes
     // filtered search over the stored layout possible (knnIndexedFiltered)
-    val e = graft.Materialize.table(emb)
-    val centroids = graft.Materialize.table(Ann.kmeansCentroids(e, cells))
-    centroids.write.mode("overwrite").parquet(s"$root/model/centroids")
-    val assigned = graft.Materialize.table(Ann.assignCells(e, centroids))
-    val cb = graft.Materialize.table(
-      Ann.pqCodebooks(residuals(e, assigned, centroids), m, codes,
-        iters = 2, dim = Dim))
-    cb.write.mode("overwrite").parquet(s"$root/model/codebooks")
-    writeMembers(e, assigned, centroids, cb, root, gen = 1L, m)
-    Seq(e, centroids, assigned, cb).foreach(_.unpersist(blocking = false))
+    // every table cached here is freed on the way out (the centroids
+    // are a local table and need no cache)
+    val scope = new graft.Materialize.Scoped
+    try {
+      val e = scope.table(emb)
+      val centroids = Ann.kmeansCentroids(e, cells)
+      centroids.write.mode("overwrite").parquet(s"$root/model/centroids")
+      val assigned = scope.table(Ann.assignCells(e, centroids))
+      val cb = scope.table(
+        Ann.pqCodebooks(residuals(e, assigned, centroids), m, codes,
+          iters = 2, dim = Dim))
+      cb.write.mode("overwrite").parquet(s"$root/model/codebooks")
+      writeMembers(e, assigned, centroids, cb, root, gen = 1L, m)
+    } finally scope.free()
   }
 
   /** Encode a NEW slice against the LOADED model and write it as the
@@ -89,10 +93,12 @@ object AnnIndex {
       "'cell' is the index's partition column — rename the input column")
     val centroids = spark.read.parquet(s"$root/model/centroids")
     val cb = spark.read.parquet(s"$root/model/codebooks")
-    val e = graft.Materialize.table(newVecs)
-    val assigned = graft.Materialize.table(Ann.assignCells(e, centroids))
-    writeMembers(e, assigned, centroids, cb, root, next, m)
-    Seq(e, assigned).foreach(_.unpersist(blocking = false))
+    val scope = new graft.Materialize.Scoped
+    try {
+      val e = scope.table(newVecs)
+      val assigned = scope.table(Ann.assignCells(e, centroids))
+      writeMembers(e, assigned, centroids, cb, root, next, m)
+    } finally scope.free()
     next
   }
 

@@ -109,16 +109,20 @@ object Dedup {
                                   numPerm: Int, bands: Int)
       : (DataFrame, Seq[DataFrame]) = {
     val rowsPerBand = numPerm / bands
-    val sigs = minhashSignatures(docs, numPerm)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // each intermediate is built by its own count, in order, and read
+    // as a plan leaf: left as lazy persists nested in one plan, their
+    // caches were built by concurrent adaptive stages, and whether a
+    // build raced another changed the job count from run to run
+    val (sigs, sigsHandle) =
+      graft.Materialize.tableWithHandle(minhashSignatures(docs, numPerm))
     // pre-pass: one rep (min doc_id) per distinct signature; map-side
     // partial agg absorbs the skew of giant identical-text groups
-    val groups = sigs.groupBy("sig")
-      .agg(min("doc_id").as("rep"), count(lit(1)).as("n_members"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val members = sigs.join(groups, "sig")
-      .select(col("rep"), col("doc_id"), col("n_members"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (groups, groupsHandle) = graft.Materialize.tableWithHandle(
+      sigs.groupBy("sig")
+        .agg(min("doc_id").as("rep"), count(lit(1)).as("n_members")))
+    val (members, membersHandle) = graft.Materialize.tableWithHandle(
+      sigs.join(groups, "sig")
+        .select(col("rep"), col("doc_id"), col("n_members")))
     val repSigs = groups.select(col("rep").as("doc_id"), col("sig"))
     val repPairs = repBandCandidates(repSigs, bands, rowsPerBand)
       .join(repSigs.select(col("doc_id").as("a"), col("sig").as("sig_a")), "a")
@@ -146,13 +150,14 @@ object Dedup {
     (cross.union(within)
       .select(col("a"), col("b"),
         round(col("est_jaccard"), 4).as("est_jaccard")),
-      Seq(sigs, groups, members))
+      Seq(sigsHandle, groupsHandle, membersHandle))
   }
 
   // the LSH candidate table feeds both the minhash-dup and the exact-
   // Jaccard queries; memoize the (signatures + band join) per doc table
+  // (pairs, row count): the count is the one the memo's build took
   private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, Long)]
 
   // the threshold sweep's GATED branch reduces the distributed CC
   // labels of the oversized components to a ≤|levels|-entry rollup +
@@ -166,13 +171,19 @@ object Dedup {
     * over a previous generation of the dir's data. */
   def cachedMinhashPairs(key: String, docs: DataFrame,
                          threshold: Double): DataFrame =
+    countedMinhashPairs(key, docs, threshold)._1
+
+  /** [[cachedMinhashPairs]] with its row count, kept from the memo's
+    * build. */
+  private def countedMinhashPairs(key: String, docs: DataFrame,
+                                  threshold: Double): (DataFrame, Long) =
     pairCache.getOrElseUpdate(
       s"${graft.GraftSession.sessionKey(docs.sparkSession, key)}/$threshold", {
         val (pairs, handles) =
           minhashDupPairsImpl(docs, threshold, numPerm = 128, bands = 8)
         // materialize the memo FIRST, then free the signature/group
         // intermediates — only the |pairs| table stays cached
-        val m = graft.Materialize.table(pairs)
+        val m = graft.Materialize.tableWithCount(pairs)
         handles.foreach(_.unpersist(blocking = false))
         m
       })
@@ -426,15 +437,15 @@ object Dedup {
                         cacheKey: String, threshold: Double = 0.8): DataFrame =
     ccCache.getOrElseUpdate(
       s"${graft.GraftSession.sessionKey(spark, cacheKey)}/$threshold", {
-      val pairs = cachedMinhashPairs(cacheKey, docs, threshold)
-        .select(col("a").as("src"), col("b").as("dst"))
+      val (memo, nPairs) = countedMinhashPairs(cacheKey, docs, threshold)
+      val pairs = memo.select(col("a").as("src"), col("b").as("dst"))
       // size the GraphX partitioning to the PAIR graph, not the session
       // default: Pregel costs a fixed per-partition overhead per
       // superstep, and the near-dup pair graph is orders of magnitude
       // smaller than the corpus (measured 7.2 s -> ~2 s at sf0.1 where
       // the pair graph is tiny). Scales up unchanged: one partition per
       // ~250k pairs.
-      val parts = math.max(2L, pairs.count() / 250000L + 1L).toInt
+      val parts = math.max(2L, nPairs / 250000L + 1L).toInt
       val pe = pairs.repartition(parts)
       val g = graft.graph.Graph(graft.graph.GraphBuilder.vertices(pe), pe)
       graft.Materialize.table(graft.graph.Gx.connectedComponents(g))

@@ -40,4 +40,12 @@ object Bridge {
       .fromDataset(ds.queryExecution.toRdd, ds, isStreaming = false)
     org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, leaf)
   }
+
+  /** `df`'s rows as Catalyst's internal rows, with no conversion to
+    * external `Row`s: array columns stay `ArrayData`, so a kernel can
+    * read them with the same accessors a native expression uses. */
+  def internalRows(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.toRdd
 }

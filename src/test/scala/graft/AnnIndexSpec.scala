@@ -221,4 +221,31 @@ class AnnIndexSpec extends AnyFunSuite {
           r.getLong(2), r.getLong(3))).toSeq
     assert(search(before) == search(after))
   }
+
+  test("writing the index and a generation frees every table it caches") {
+    val sc = spark.sparkContext
+    def persisted() = sc.getPersistentRDDs.keySet.toSet
+    // blocks are dropped asynchronously after unpersist: wait for it
+    def storedSince(before: Set[Int]): Set[Int] = {
+      def added() = sc.getRDDStorageInfo.map(_.id).toSet -- before
+      val deadline = System.currentTimeMillis() + 30000
+      var ids = added()
+      while (ids.nonEmpty && System.currentTimeMillis() < deadline) {
+        Thread.sleep(50)
+        ids = added()
+      }
+      ids
+    }
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-vec-index-storage").toString
+    val emb = Tables(spark, sf).embeddings
+    val before = persisted()
+    val storedBefore = sc.getRDDStorageInfo.map(_.id).toSet
+    AnnIndex.writeVectorIndex(emb.filter(col("vec_id") < 400), root)
+    assert(persisted() -- before == Set.empty)
+    assert(storedSince(storedBefore) == Set.empty)
+    AnnIndex.writeVectorGeneration(emb.filter(col("vec_id") >= 400), root)
+    assert(persisted() -- before == Set.empty)
+    assert(storedSince(storedBefore) == Set.empty)
+  }
 }

@@ -561,4 +561,156 @@ class AnnSpec extends AnyFunSuite {
     assert(mips.length == 35)
     assert(mips.forall { case (q, _, n) => q != n })
   }
+
+  /** (cell → centroid float bits): bit-exact, order-free comparison. */
+  private def centroidBits(df: org.apache.spark.sql.DataFrame): Map[Int, Seq[Int]] =
+    df.select("cell", "centroid").collect().map(r =>
+      r.getInt(0) -> r.getSeq[Float](1).map(java.lang.Float.floatToIntBits)).toMap
+
+  private def toyEmb(vs: Seq[(Long, Seq[Float])]) =
+    vs.map { case (i, v) => (i, v.toArray) }.toDF("vec_id", "embedding")
+
+  /** Sorted rendered rows: exact (floats print round-trip), and counts
+    * duplicates. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  test("microOf equals Spark's micro() on the corpus, half-micro ties and wide magnitudes") {
+    val corpus = Tables(spark, sf).embeddings
+      .select(explode($"embedding").as("x")).as[Float].collect().toSeq
+    // odd multiples of 2^-7 land EXACTLY on k.5 micro
+    val ties = (1 to 4001 by 2).map(_ / 128f)
+    val nearTies = (0 until 500).flatMap { k =>
+      val f = ((k + 0.5) / 1e6).toFloat
+      Seq(f, Math.nextUp(f), Math.nextDown(f))
+    }
+    val rnd = new scala.util.Random(7)
+    val wide = Seq.fill(3000)(
+      (rnd.nextDouble() * math.pow(10, rnd.nextInt(12) - 8)).toFloat)
+    val xs = (corpus ++ ties ++ nearTies ++ wide ++ Seq(0f, 0.5f, 4.9999997e-7f))
+      .flatMap(x => Seq(x, -x))
+    assert(ties.forall(x => x.toDouble * 1e6 % 1.0 == 0.5))
+    val got = xs.toDF("x").select($"x", Ann.micro($"x")).as[(Float, Long)].collect()
+    assert(got.length == xs.length)
+    got.foreach { case (x, m) => assert(Ann.microOf(x) == m, s"x = $x") }
+  }
+
+  test("kmeansCentroids equals the DataFrame Lloyd replay on sf0.001") {
+    val emb = Tables(spark, sf).embeddings
+    for (cells <- Seq(8, 16); iters <- Seq(1, 3)) {
+      val got = centroidBits(Ann.kmeansCentroids(emb, cells, iters))
+      assert(got.nonEmpty)
+      assert(got == centroidBits(AnnReplays.kmeansCentroids(emb, cells, iters)),
+        s"cells=$cells iters=$iters")
+    }
+  }
+
+  test("kmeansCentroids equals the DataFrame Lloyd replay on toy tables") {
+    def same(name: String, vs: Seq[(Long, Seq[Float])], cells: Int,
+             iters: Int = 3): Map[Int, Seq[Int]] = {
+      val emb = toyEmb(vs)
+      val got = centroidBits(Ann.kmeansCentroids(emb, cells, iters))
+      assert(got == centroidBits(AnnReplays.kmeansCentroids(emb, cells, iters)), name)
+      got
+    }
+    // vec 0 ties cells 0 and 1 (same direction) and goes to the larger
+    // cell, so cell 0 loses every member in round 1 and drops out
+    val emptied = same("cell empties", Seq(
+      0L -> Seq(1f, 0f), 1L -> Seq(2f, 0f), 2L -> Seq(0f, 1f),
+      3L -> Seq(0f, 3f), 4L -> Seq(1f, 1f), 5L -> Seq(-1f, 0.5f)), cells = 3)
+    assert(emptied.keySet == Set(1, 2))
+    // duplicates tie the two identical init centroids; a zero vector's
+    // cosine is 0 with every centroid, so it goes to the largest cell
+    val zeros = same("duplicates and zero vectors", Seq(
+      0L -> Seq(1f, 2f, 3f), 1L -> Seq(1f, 2f, 3f), 2L -> Seq(0f, 0f, 0f),
+      3L -> Seq(3f, 2f, 1f), 4L -> Seq(1f, 2f, 3f), 5L -> Seq(0f, 0f, 0f)), cells = 3)
+    assert(zeros.keySet == Set(1, 2))
+    assert(zeros(2) == Seq.fill(3)(java.lang.Float.floatToIntBits(0f)))
+    val rnd = new scala.util.Random(11)
+    def vec(d: Int): Seq[Float] = Seq.fill(d)((rnd.nextDouble() * 2 - 1).toFloat)
+    assert(same("fewer vectors than cells",
+      (0L until 5L).map(_ -> vec(4)), cells = 16).keySet == (0 until 5).toSet)
+    val single = same("single vector", Seq(0L -> Seq(0.25f, -0.5f, 1e-7f)), cells = 16)
+    assert(single.keySet == Set(0))
+    // negative components, and negative vec_ids as init cells
+    val neg = same("negative components and ids",
+      (-3L until 40L).map(_ -> vec(6)), cells = 4, iters = 4)
+    assert(neg.keySet.exists(_ < 0))
+    same("seeded corpus", (0L until 300L).map(_ -> vec(8)), cells = 7, iters = 5)
+    // micro quotients at exact .5 round half away from zero
+    val ties = same("mean ties", Seq(0L -> Seq(1e-6f, -1e-6f, 0.5f),
+      1L -> Seq(2e-6f, -2e-6f, 0.5f)), cells = 1)
+    assert(ties(0) == Seq(2e-6f, -2e-6f, 0.5f).map(java.lang.Float.floatToIntBits))
+  }
+
+  test("IVF index and its queries equal the DataFrame replay on sf0.001") {
+    val emb = Tables(spark, sf).embeddings
+    val (_, centroids, assigned, members) = Ann.ivfIndex(spark, sf)
+    val (rc, ra, rm) = AnnReplays.ivfIndex(emb, 16)
+    assert(centroidBits(centroids) == centroidBits(rc))
+    assert(members.columns.toSeq == rm.columns.toSeq)
+    assert(assigned.columns.toSeq == Seq("vec_id", "cell"))
+    assert(rows(members) == rows(rm))
+    assert(rows(assigned) == rows(ra))
+    assert(rows(Ann.cellSizes(spark, sf)) == rows(AnnReplays.cellSizes(ra)))
+    assert(rows(Ann.semanticDedup(spark, sf)) ==
+      rows(AnnReplays.semanticDedup(ra, rm, 0.35)))
+    val knn = rows(Ann.knnIvf(spark, sf))
+    assert(knn.size == 200)
+    assert(knn == rows(AnnReplays.knnIvf(emb, rc, rm, 20, 10, 4)))
+    // a quantizer wider than the literal gate builds its members through
+    // the assignCells join: same table
+    val wide = tempDir("graft-emb-wide")
+    emb.write.parquet(s"$wide/embeddings.parquet")
+    val saved = Ann.LiteralAssignMaxCells
+    try {
+      Ann.LiteralAssignMaxCells = 8
+      val (_, _, wa, wm) = Ann.ivfIndex(spark, wide)
+      assert(wm.columns.toSeq == rm.columns.toSeq)
+      assert(rows(wm) == rows(rm))
+      assert(rows(wa) == rows(ra))
+    } finally { Ann.LiteralAssignMaxCells = saved }
+  }
+
+  test("IVF family on an empty corpus: empty outputs, unchanged schemas; one row still works") {
+    val base = Tables(spark, sf).embeddings
+    val empty = tempDir("graft-emb-empty")
+    base.limit(0).write.parquet(s"$empty/embeddings.parquet")
+    val one = tempDir("graft-emb-one")
+    base.filter($"vec_id" === 0L).write.parquet(s"$one/embeddings.parquet")
+    def outs(dir: String) = Seq(Ann.knnIvf(spark, dir), Ann.cellSizes(spark, dir),
+      Ann.semanticDedup(spark, dir), Ann.knnFilteredIvf(spark, dir))
+    def types(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => (f.name, f.dataType))
+    val want = outs(sf).map(types)
+    outs(empty).zip(want).foreach { case (df, t) =>
+      assert(df.collect().isEmpty)
+      assert(types(df) == t)
+    }
+    outs(one).zip(want).foreach { case (df, t) =>
+      df.collect()
+      assert(types(df) == t)
+    }
+    assert(Ann.cellSizes(spark, one).as[(Int, Long, Long)].collect().toSeq ==
+      Seq((0, 1L, 10000L)))
+  }
+
+  test("ivfIndex build: at most iters + 5 jobs and ONE persisted table") {
+    // a fresh dir, so the index memo builds here
+    val dir = tempDir("graft-emb-copy")
+    Tables(spark, sf).embeddings.write.parquet(s"$dir/embeddings.parquet")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val iters = 3
+    // the parquet read's schema inference, the init collect, one job
+    // per Lloyd round, and the member table's cache build + count
+    // (cache stage, exchange, result)
+    val jobs = jobsIn("ivf-build")(Ann.ivfIndex(spark, dir))
+    assert(jobs <= iters + 5, s"$jobs jobs")
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"persisted: $added")
+  }
 }

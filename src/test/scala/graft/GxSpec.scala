@@ -597,19 +597,6 @@ class GxSpec extends AnyFunSuite {
   }
 
   test("triangle counts: one CSR kernel job per graph serves every consumer") {
-    val sc = spark.sparkContext
-    // jobs `f` starts; the status store sees jobs in submission order,
-    // so once a marker job after `f` shows, every job of `f` has
-    def jobsIn(group: String)(f: => Unit): Int = {
-      sc.setJobGroup(group, group)
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-end", group)
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (sc.statusTracker.getJobIdsForGroup(s"$group-end").isEmpty &&
-        System.currentTimeMillis() < deadline) Thread.sleep(20)
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
     val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst")
     val g = Graph(GraphBuilder.vertices(e), e)
     g.vertexCount

@@ -7,6 +7,20 @@ import org.scalatest.funsuite.AnyFunSuite
 object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.get("graft-test", cpus = 4)
   val sf = "/root/testdata/sf0.001"
+
+  /** Spark jobs `f` starts. The status store sees jobs in submission
+    * order, so once a marker job after `f` shows, every job of `f` has. */
+  def jobsIn(group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-end", group)
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 30000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-end").isEmpty &&
+      System.currentTimeMillis() < deadline) Thread.sleep(20)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {
