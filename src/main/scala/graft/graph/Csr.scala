@@ -21,6 +21,9 @@ final class Csr(val ids: Array[Long], val offsets: Array[Int],
 
   def arcs: Int = nbrs.length
 
+  /** Arcs of index `i`: a self-loop counts 2, each parallel edge 1. */
+  def degree(i: Int): Int = offsets(i + 1) - offsets(i)
+
   /** Index of vertex `id`, or −1 when it has no edge. */
   def indexOf(id: Long): Int = {
     val i = java.util.Arrays.binarySearch(ids, id)
@@ -35,14 +38,6 @@ final class Csr(val ids: Array[Long], val offsets: Array[Int],
       while (a > offsets(u) && nbrs(a - 1) == v) a -= 1
       a
     }
-  }
-
-  /** Owner of arc position `a`: the u with offsets(u) ≤ a < offsets(u+1). */
-  def arcSource(a: Int): Int = {
-    val i = java.util.Arrays.binarySearch(offsets, a)
-    // a run of equal offsets belongs to degree-0 rows — never the case
-    // here (every id has an edge), so an exact hit IS the owner's start
-    if (i >= 0) i else -i - 2
   }
 }
 
@@ -245,7 +240,6 @@ object Csr {
     val tri = new Array[Long](m)
     if (m == 0) return (deg, tri)
     val community = comm(members(0))
-    def degree(v: Int) = c.offsets(v + 1) - c.offsets(v)
     def pos(v: Int) = java.util.Arrays.binarySearch(members, v)
     // distinct intra oriented out-targets per member, with the number
     // of oriented edge copies to each
@@ -263,8 +257,8 @@ object Csr {
         while (a + run < end && c.nbrs(a + run) == x) run += 1
         if (comm(x) == community) {
           deg(p) += run
-          val du = degree(u)
-          val dx = degree(x)
+          val du = c.degree(u)
+          val dx = c.degree(x)
           if (x == u) { outBuf += x; mulBuf += run / 2 }
           else if (du < dx || (du == dx && u < x)) { outBuf += x; mulBuf += run }
         }
@@ -303,11 +297,23 @@ object Csr {
   }
 
   /** Per-index triangle counts of the whole graph: [[intraStats]] with
-    * one community holding every vertex, so each index gets exactly the
-    * credits [[Graph.triangleVertexCounts]]' DataFrame stream sums for
-    * it. O(|V| + arcs) memory. */
-  def triangles(c: Csr): Array[Long] =
-    intraStats(c, new Array[Int](c.size), Array.tabulate(c.size)(identity))._2
+    * one community holding every index that `keep` holds, so each kept
+    * index gets exactly the credits [[Graph.triangleVertexCounts]]'
+    * DataFrame stream sums for it, and every other index 0. `keep` is
+    * the vertex table: the stream's inner joins against the degree
+    * table drop every edge with an endpoint outside it, while the
+    * orientation still ranks by the full degree. O(|V| + arcs) memory. */
+  def triangles(c: Csr, keep: Int => Boolean = _ => true): Array[Long] = {
+    val members = (0 until c.size).filter(keep).toArray
+    val comm = new Array[Int](c.size)
+    var i = 0
+    while (i < c.size) { if (!keep(i)) comm(i) = 1; i += 1 }
+    val tri = intraStats(c, comm, members)._2
+    val out = new Array[Long](c.size)
+    var p = 0
+    while (p < members.length) { out(members(p)) = tri(p); p += 1 }
+    out
+  }
 
   /** Average local clustering coefficient of one community, over ALL
     * its members (2·t / (d·(d−1)), zero below degree 2), rounded to 6

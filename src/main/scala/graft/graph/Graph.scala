@@ -1,7 +1,9 @@
 package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Property graph over DataFrames — the GraphFrames surface re-expressed
@@ -22,17 +24,20 @@ import org.apache.spark.storage.StorageLevel
   * to the driver: the reference pulls edges into NetworkX (main.py:122)
   * for every metric, which caps it at driver memory; every metric below
   * is DataFrame algebra that scales with the cluster. At or below the
-  * gate the adjacency is collected once and broadcast ([[Graph.csr]]).
+  * gate the adjacency and the vertex ids are collected once and
+  * broadcast ([[Graph.csr]], [[Graph.vertexIds]]).
   */
 object Graph {
-  /** Broadcast gate for the degree/adjacency side tables: vertex sets
-    * at or below this broadcast into the joins and run the broadcast-
-    * CSR kernels (square count, per-vertex triangle counts, multi-
-    * source BFS, Brandes, label propagation, connected components, the
-    * community walk sample);
-    * above it
-    * the co-partitioned shuffle plans and GraphX Pregel loops — the
-    * 100 TB branches — run. A
+  /** Broadcast gate for the degree/adjacency side tables, checked
+    * against [[Graph.vertexCount]]: vertex sets at or below this
+    * broadcast into the joins and run the broadcast-CSR kernels (square
+    * count, per-vertex triangle counts, multi-source BFS, Brandes, label
+    * propagation, connected components, the community walk sample), and
+    * a graph collects its vertex ids once ([[Graph.vertexIds]]) to serve
+    * its degree, triangle and betweenness tables as one-partition
+    * leaves over them and the CSR, with no exchange and no persist;
+    * above it the co-partitioned shuffle plans and GraphX Pregel loops
+    * — the 100 TB branches — run, and nothing collects ids. A
     * `var` ONLY so FallbackGateSpec and the bench's fallback probes
     * can force the above-gate branches (which sf0.1's ~20k vertices
     * would otherwise never execute — VERDICT r8 audit caveat);
@@ -48,31 +53,71 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
     edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
 
-  /** Per-vertex degree. One shuffle on vertex id; partial counts are
-    * map-side combined. Isolated vertices get degree 0 via the vertex
-    * left join. (ref: nx.degree / main.py:142-144)
+  /** Per-vertex degree: (id, degree), a row per vertex-table row. A
+    * self-loop counts 2 and each parallel edge 1; isolated vertices get
+    * 0, and an edge whose other endpoint is not a vertex still counts
+    * for the endpoint that is. (ref: nx.degree / main.py:142-144)
     *
-    * A persisted lazy val: degrees feed the orientation joins, the
-    * clustering/transitivity denominators and several metrics — and an
-    * aggregate's size estimate defeats Catalyst's auto-broadcast, so
-    * every consumer re-deriving it costs both the recompute AND a
-    * shuffle join it should not need.
+    * Two regimes, split at [[Graph.broadcastVertexGate]]:
+    *  - at or below it, the [[csr]] run length of each of [[vertexIds]],
+    *    a one-partition table that one task computes per action
+    *    ([[Gx.csrTable]]): no exchange, nothing persisted;
+    *  - above it, one shuffle on vertex id (partial counts map-side
+    *    combined) and the vertex left join, persisted: degrees feed the
+    *    orientation joins, the clustering/transitivity denominators and
+    *    several metrics, and an aggregate's size estimate defeats
+    *    Catalyst's auto-broadcast, so every consumer re-deriving it
+    *    would cost both the recompute AND a shuffle join.
     *
     * Builders whose vertex set IS the edge-endpoint set (no isolates
     * by construction — e.g. the co-purchase derivation) pass the
     * degree table they already computed via `precomputedDegrees`,
-    * skipping the isolate-preserving vertex join entirely. */
+    * which both regimes serve as is. */
   @transient lazy val degrees: DataFrame =
     precomputedDegrees.getOrElse {
-      val d = symmetrized.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("degree"))
-      graft.Materialize.table(
-        vertices.select("id").join(d, Seq("id"), "left")
-          .na.fill(0L, Seq("degree")))
+      if (vertexCount <= Graph.broadcastVertexGate) {
+        Gx.csrTable(this, StructType(Seq(idField, StructField("degree", LongType, false))),
+          vertexIds.value.length) { (c, ids) =>
+          ids.iterator.map { id =>
+            val i = c.indexOf(id)
+            InternalRow(id, if (i < 0) 0L else c.degree(i).toLong)
+          }
+        }
+      } else {
+        val d = symmetrized.groupBy(col("src").as("id"))
+          .agg(count(lit(1)).as("degree"))
+        graft.Materialize.table(
+          vertices.select("id").join(d, Seq("id"), "left")
+            .na.fill(0L, Seq("degree")))
+      }
     }
 
-  /** Cached vertex count (drives broadcast decisions). */
-  @transient lazy val vertexCount: Long = vertices.count()
+  /** The `id` field of the per-vertex tables, nullable as the vertex
+    * table's. */
+  private[graph] def idField: StructField =
+    StructField("id", LongType, vertices.schema("id").nullable)
+
+  /** Cached vertex count: decides [[Graph.broadcastVertexGate]]'s
+    * regime for every algorithm. One RDD count over the vertex table's
+    * internal rows: the table's own shuffles run (the distinct of a
+    * derived vertex set), but not a count aggregate's single-partition
+    * exchange, which as an adaptive query stage costs a job of its
+    * own. */
+  @transient lazy val vertexCount: Long =
+    org.apache.spark.sql.graft.Bridge.internalRows(vertices.select("id")).count()
+
+  /** At or below [[Graph.broadcastVertexGate]]: the vertex table's ids,
+    * in its row order, collected once (one action) and broadcast — the
+    * driver and each executor hold |V| longs. The per-vertex tables
+    * ([[degrees]], [[triangleVertexCounts]], [[GxBetweenness]]) read
+    * them next to [[csr]]. Above the gate nothing collects them. */
+  @transient private[graft] lazy val vertexIds: org.apache.spark.broadcast.Broadcast[Array[Long]] = {
+    require(vertexCount <= Graph.broadcastVertexGate,
+      s"vertex ids are collected at or below the gate only: |V| = $vertexCount")
+    val spark = vertices.sparkSession
+    import spark.implicits._
+    spark.sparkContext.broadcast(vertices.select("id").as[Long].collect())
+  }
 
   /** Degree distribution: degree → number of vertices, plus the
     * normalized fraction pk = n_vertices / |V| the reference plots
@@ -80,8 +125,8 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
     * cached [[vertexCount]] — a scalar, not a second aggregate.
     *
     * Denominator choice: pk divides by |V| INCLUDING isolated vertices
-    * (which appear here as a degree-0 row via the [[degrees]] left
-    * join), matching nx.degree_histogram, where fractions over the
+    * (which appear here as a degree-0 row of [[degrees]] in both
+    * regimes), matching nx.degree_histogram, where fractions over the
     * histogram sum to 1 across all nodes. An edges-only degree table
     * (the SQL-oracle shape) would silently shrink the denominator on
     * graphs with isolates — pinned by GraphSpec. */
@@ -104,46 +149,57 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
     * never materializes wedges: cost is O(deg(u)+deg(v)) per edge.
     *
     * Two regimes, split at [[Graph.broadcastVertexGate]], with the same
-    * counts on any multigraph:
+    * rows on any multigraph:
     *  - at or below it, one single-task job over the broadcast [[csr]]
     *    ([[Csr.triangles]], the community sample's intersection rule
-    *    with one community), memoized per graph as a driver-side array
-    *    of |V| longs ([[csrTriangles]]); the counts join the degrees as
-    *    a one-partition table, and nothing is persisted;
+    *    with one community: the vertex table), memoized per graph as a
+    *    broadcast array of |V| longs ([[csrTriangles]]); the table is a
+    *    one-partition [[Gx.csrTable]] that reads the degree off the CSR
+    *    too, so there is no degree join and nothing is persisted;
     *  - above it, the persisted oriented DataFrame stream
     *    ([[orientedCommon]]), whose only wide rows are the adjacency
-    *    arrays, bounded by the orientation at O(√m). */
-  def triangleVertexCounts: DataFrame = {
-    val perVertex = if (vertexCount <= Graph.broadcastVertexGate) {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      val ids = csr.value.ids
+    *    arrays, bounded by the orientation at O(√m), left-joined to
+    *    [[degrees]]. */
+  def triangleVertexCounts: DataFrame =
+    if (vertexCount <= Graph.broadcastVertexGate) {
       val tri = csrTriangles
-      // driver-side rows: one partition, declared so (see
-      // GraphBuilder.communities)
-      ids.indices.map(i => (ids(i), tri(i))).toDF("id", "triangles").coalesce(1)
+      Gx.csrTable(this, StructType(Seq(idField, StructField("degree", LongType, false),
+        StructField("triangles", LongType, false))), vertexIds.value.length) { (c, ids) =>
+        val t = tri.value
+        ids.iterator.map { id =>
+          val i = c.indexOf(id)
+          if (i < 0) InternalRow(id, 0L, 0L) else InternalRow(id, c.degree(i).toLong, t(i))
+        }
+      }
     } else {
       val withBoth = orientedCommon
       // contributions as a union of plain selects over the PERSISTED
       // intersection stream — native explode generators, three cheap
       // cache scans. (A single-pass transform(..)+concat+explode variant
       // routed every struct through the interpreted HOF path: 10× slower.)
-      withBoth
+      val perVertex = withBoth
         .select(col("lo").as("id"), size(col("common")).cast("long").as("n"))
         .union(withBoth.select(col("hi").as("id"), size(col("common")).cast("long").as("n")))
         .union(withBoth.select(explode(col("common")).as("id")).withColumn("n", lit(1L)))
         .groupBy("id").agg(sum("n").as("triangles"))
+      // degree rides along so every clustering consumer is a pure
+      // projection/aggregate over the ONE memoized table — no re-join
+      degrees.join(perVertex, Seq("id"), "left")
+        .na.fill(0L, Seq("triangles"))
     }
-    // degree rides along so every clustering consumer is a pure
-    // projection/aggregate over the ONE memoized table — no re-join
-    degrees.join(perVertex, Seq("id"), "left")
-      .na.fill(0L, Seq("triangles"))
-  }
 
-  /** Triangle count of every [[csr]] index, from one single-task job;
-    * memoized, so every triangle consumer of this graph shares one
-    * kernel run. Below the gate only. */
-  @transient private lazy val csrTriangles: Array[Long] = Gx.onCsr(this)(Csr.triangles)
+  /** Triangle count of every [[csr]] index, the edges outside the vertex
+    * table left out, from one single-task job; memoized, so every
+    * triangle consumer of this graph shares one kernel run. Below the
+    * gate only. */
+  @transient private lazy val csrTriangles: org.apache.spark.broadcast.Broadcast[Array[Long]] = {
+    val ids = vertexIds
+    edges.sparkSession.sparkContext.broadcast(Gx.onCsr(this) { c =>
+      val keep = new Array[Boolean](c.size)
+      ids.value.foreach { id => val i = c.indexOf(id); if (i >= 0) keep(i) = true }
+      Csr.triangles(c, keep(_))
+    })
+  }
 
   /** GraphFrames/GraphX `collectNeighborIds` parity: per-vertex sorted
     * neighbor-id array over the undirected edge set. One shuffle keyed
@@ -160,10 +216,11 @@ final case class Graph(vertices: DataFrame, edges: DataFrame,
         .agg(sort_array(collect_list(col("dst"))).as("neighbor_ids")))
 
   /** The undirected edge set as one broadcast [[Csr]] — the adjacency
-    * every below-[[Graph.broadcastVertexGate]] kernel reads (square
-    * count, [[triangleVertexCounts]], [[Gx.multiSourceBfs]],
-    * [[GxBetweenness]], [[Gx.labelPropagation]],
-    * [[Gx.connectedComponents]], [[CommunitySample]]). Built once per graph on first use: one
+    * every below-[[Graph.broadcastVertexGate]] kernel and table reads
+    * (square count, [[degrees]], [[triangleVertexCounts]],
+    * [[Gx.multiSourceBfs]], [[GxBetweenness]], [[Gx.labelPropagation]],
+    * [[Gx.connectedComponents]], [[CommunitySample]]). Built once per
+    * graph on first use: one
     * collect of the edge list as primitive (src, dst) arrays per
     * partition, arranged into CSR on the driver and shipped once per
     * executor (|V| longs plus 2|E| + |V| + 1 ints), so the kernels run

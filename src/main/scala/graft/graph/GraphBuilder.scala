@@ -139,16 +139,18 @@ object GraphBuilder {
 
   // Seven queries (triangles, local/global clustering, transitivity,
   // summary, clustering null, sample metrics) consume per-vertex
-  // triangle counts; materialize the (id, degree, triangles) table
-  // once per graph. Below the vertex gate this memo is the only
-  // table persisted for it (the counts come from one CSR job); above
-  // it the oriented stream under it is persisted too.
+  // triangle counts. Above the vertex gate the (id, degree, triangles)
+  // table is materialized once per graph, over the persisted oriented
+  // stream. Below it the graph already memoizes the counts (one CSR
+  // job) and serves the table as a one-partition leaf, so nothing is
+  // cached here.
   private val triCache = TrieMap.empty[Graph, DataFrame]
 
-  /** Per-vertex triangle counts of `g`, memoized + materialized. */
+  /** Per-vertex triangle counts of `g`: (id, degree, triangles), a row
+    * per vertex; memoized per graph. */
   def triangles(g: Graph): DataFrame =
-    triCache.getOrElseUpdate(g,
-      Materialize.table(g.triangleVertexCounts))
+    if (Gx.belowGate(g)) g.triangleVertexCounts
+    else triCache.getOrElseUpdate(g, Materialize.table(g.triangleVertexCounts))
 
   // landmark BFS distances feed three queries (bfs, closeness, and the
   // spirit of diameter); materialize the top-8 table once — top-4 is a

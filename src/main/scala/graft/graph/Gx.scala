@@ -2,7 +2,9 @@ package graft.graph
 
 import org.apache.spark.graphx.{Edge, EdgeDirection, Graph => XGraph, Pregel, VertexRDD}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import scala.collection.concurrent.TrieMap
 
@@ -673,6 +675,21 @@ object Gx {
     val bc = g.csr
     g.edges.sparkSession.sparkContext.parallelize(Seq(0), 1)
       .map(_ => f(bc.value)).collect()(0)
+  }
+
+  /** Below the gate: a one-partition table of `rowCount` rows that one
+    * task computes, on every action, from the broadcast CSR and the
+    * graph's vertex ids ([[Graph.vertexIds]]). Nothing is persisted: the
+    * rows are a pass over arrays the executor already holds, and the
+    * plan is one scan leaf ([[org.apache.spark.sql.graft.Bridge.singlePartitionLeaf]]). */
+  private[graph] def csrTable(g: Graph, schema: StructType, rowCount: Long)(
+      f: (Csr, Array[Long]) => Iterator[InternalRow]): DataFrame = {
+    val bc = g.csr
+    val ids = g.vertexIds
+    val spark = g.edges.sparkSession
+    val rows = spark.sparkContext.parallelize(Seq(0), 1)
+      .flatMap(_ => f(bc.value, ids.value))
+    org.apache.spark.sql.graft.Bridge.singlePartitionLeaf(spark, schema, rowCount, rows)
   }
 
   /** One Spark job over `sources`, split across at most one task per

@@ -1,21 +1,31 @@
 package graft.graph
 
 import org.apache.spark.graphx.{EdgeDirection, Pregel, VertexRDD}
-import org.apache.spark.sql.DataFrame
+import graft.Materialize
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Brandes betweenness (ref: nx.betweenness_centrality) from k seeded
   * UNIFORM md5-ordered sources: the Brandes–Pich estimator, scaled by
   * n/k (unbiased only for uniform sources), each unordered pair counted
   * once. Two regimes, split at [[Graph.broadcastVertexGate]]:
   *
-  *  - at or below it, ONE source-parallel Spark job over the graph's
-  *    broadcast CSR ([[csrSweep]]): sources are split across tasks,
-  *    each task runs textbook per-source Brandes with dense arrays and
-  *    ships its sums in chunks;
-  *  - above it (the 100 TB branch), GraphX Pregel ([[pregelSweep]]):
-  *    one forward run carrying all k (dist, sigma) slots, then one
-  *    aggregateMessages per BFS level from the deepest frontier upward.
+  *  - at or below it, the sources are picked on the driver from the
+  *    graph's collected vertex ids ([[md5Sources]]), then ONE
+  *    source-parallel Spark job over the graph's broadcast CSR
+  *    ([[csrSweep]]): sources are split across tasks, each task runs
+  *    textbook per-source Brandes with dense arrays and ships its sums
+  *    in chunks, summed by one reduceByKey and collected. The two
+  *    output tables are one-partition leaves over the broadcast sums
+  *    ([[csrTables]]): nothing is persisted;
+  *  - above it (the 100 TB branch), the sources come from a Spark
+  *    `orderBy(md5(..)).limit(k)`, then GraphX Pregel
+  *    ([[pregelSweep]]): one forward run carrying all k (dist, sigma)
+  *    slots, then one aggregateMessages per BFS level from the deepest
+  *    frontier upward; both output tables are persisted leaves
+  *    ([[frameTables]]).
   *
   * Both keep the same fixed-point arithmetic, so their outputs are
   * bit-identical to each other and to the DuckDB oracle.
@@ -67,11 +77,10 @@ object GxBetweenness {
   // frames' reference identity — inside an access-ordered LRU, so (a)
   // two live graphs can never collide the way identityHashCode
   // strings could, and (b) fresh-Graph-per-call patterns (the
-  // FallbackGateSpec shape) evict their oldest persisted tables
-  // instead of retaining every sweep for the session lifetime.
-  private final case class SweepTables(vtxHandle: DataFrame,
-                                       edgeHandle: DataFrame,
-                                       vtx: DataFrame, edge: DataFrame)
+  // FallbackGateSpec shape) evict their oldest tables' storage instead
+  // of retaining every sweep for the session lifetime.
+  private final case class SweepTables(vtx: DataFrame, edge: DataFrame,
+                                       release: () => Unit)
 
   private val sweepCap = 8
   private val sweepCache =
@@ -79,21 +88,8 @@ object GxBetweenness {
       16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(Graph, Int, Long), SweepTables]): Boolean =
-        if (size > sweepCap) {
-          e.getValue.vtxHandle.unpersist(blocking = false)
-          e.getValue.edgeHandle.unpersist(blocking = false)
-          true
-        } else false
+        if (size > sweepCap) { e.getValue.release(); true } else false
     }
-
-  /** persist → count → flatten like Materialize.table, but KEEPS the
-    * persisted handle so LRU eviction can free the blocks. */
-  private def matKeep(df: DataFrame): (DataFrame, DataFrame) = {
-    val cached = df.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    (cached, org.apache.spark.sql.graft.Bridge.flatten(cached))
-  }
 
   // the lock is held across the sweep computation — same per-key
   // blocking the TrieMap memo had; all callers are sequential queries
@@ -112,49 +108,119 @@ object GxBetweenness {
 
   private def computeSweep(g: Graph, numSources: Int,
                            seed: Long): SweepTables = {
-    val spark = g.edges.sparkSession
-    import spark.implicits._
     val n = g.vertexCount
-    // md5-ordered uniform sample, not xxhash64: md5 reproduces in any
-    // engine, so the DuckDB oracle picks the same sources
-    val sources = g.vertices
-      .orderBy(md5(concat_ws(":", col("id"), lit(seed))), col("id"))
-      .limit(numSources).select("id").as[Long].collect().toSeq
     val k = math.min(numSources.toLong, n)
-
-    // (dep: id → Σ_s δ_s(v) micro-longs, eb: canonical edge → Σ_s edge
-    // dependency micro-longs) → the two persisted output tables
-    def tables(deps: (DataFrame, DataFrame)): SweepTables = {
-      val (dep, eb) = deps
-      // canonicalize defensively: co-purchase edges are src<dst by
-      // construction, but Graph accepts any orientation
-      val edgeOut = g.edges
-        .select(least(col("src"), col("dst")).as("src"),
-          greatest(col("src"), col("dst")).as("dst"))
-        .join(eb, Seq("src", "dst"), "left")
-        .na.fill(0L, Seq("depmicro"))
-        .select(col("src"), col("dst"),
-          ((col("depmicro") * lit(n)).cast("double") / lit(k * 2.0 * 1.0e9))
-            .as("edge_betweenness"))
-      val (edgeHandle, edgeTable) = matKeep(edgeOut)
-      // no final round(): micro-grid values sit on decimal .5 ties that
-      // Spark (shortest-decimal HALF_UP) and binary-double engines round
-      // apart; the exact rational depMicro·n/(k·2·1e9) is bit-identical
-      val (vtxHandle, vtxTable) = matKeep(
-        g.vertices.select("id")
-          .join(dep, Seq("id"), "left")
-          .na.fill(0L, Seq("dep"))
-          .select(col("id"),
-            ((col("dep") * lit(n)).cast("double") / lit(k * 2.0 * 1.0e9))
-              .as("betweenness")))
-      SweepTables(vtxHandle, edgeHandle, vtxTable, edgeTable)
-    }
-
-    if (Gx.belowGate(g)) tables(csrSweep(g, sources))
+    if (Gx.belowGate(g))
+      csrTables(g, csrSweep(g, md5Sources(g.vertexIds.value, numSources, seed)), n, k)
     else {
+      val spark = g.edges.sparkSession
+      import spark.implicits._
+      // md5-ordered uniform sample, not xxhash64: md5 reproduces in any
+      // engine, so the DuckDB oracle picks the same sources
+      val sources = g.vertices
+        .orderBy(md5(concat_ws(":", col("id"), lit(seed))), col("id"))
+        .limit(numSources).select("id").as[Long].collect().toSeq
       Gx.of(g) // the shared base outlives the sweep's released state
-      Gx.releasingState(spark.sparkContext)(pregelSweep(g, sources))(tables)
+      Gx.releasingState(spark.sparkContext)(pregelSweep(g, sources))(
+        frameTables(g, n, k))
     }
+  }
+
+  /** The first `k` of `ids` in `orderBy(md5(concat_ws(":", id, seed)),
+    * id)` order, picked on the driver. Spark's md5 is lowercase hex, so
+    * the hex strings order as the digests' bytes compared unsigned. */
+  private[graft] def md5Sources(ids: Array[Long], k: Int, seed: Long): Seq[Long] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val keyed = ids.map(id => (md.digest(s"$id:$seed".getBytes("UTF-8")), id))
+    val order: Ordering[(Array[Byte], Long)] = { (x, y) =>
+      val c = java.util.Arrays.compareUnsigned(x._1, y._1)
+      if (c != 0) c else java.lang.Long.compare(x._2, y._2)
+    }
+    keyed.sorted(order).iterator.take(k).map(_._2).toSeq
+  }
+
+  // no final round(): micro-grid values sit on decimal .5 ties that
+  // Spark (shortest-decimal HALF_UP) and binary-double engines round
+  // apart; the exact rational micro·n/(k·2·1e9) is bit-identical. The
+  // driver-side twin multiplies exactly, as ANSI Spark does.
+  private def scaled(micro: Column, n: Long, k: Long): Column =
+    (micro * lit(n)).cast("double") / lit(k * 2.0 * 1.0e9)
+
+  private def scaled(micro: Long, n: Long, k: Long): Double =
+    Math.multiplyExact(micro, n).toDouble / (k * 2.0 * 1.0e9)
+
+  /** Above the gate: (dep: id → Σ_s δ_s(v) micro-longs, eb: canonical
+    * edge → Σ_s edge dependency micro-longs) → the two persisted output
+    * tables, released together on eviction. */
+  private def frameTables(g: Graph, n: Long, k: Long)(
+      deps: (DataFrame, DataFrame)): SweepTables = {
+    val (dep, eb) = deps
+    // canonicalize defensively: co-purchase edges are src<dst by
+    // construction, but Graph accepts any orientation
+    val (edge, edgeHandle) = Materialize.tableWithHandle(g.edges
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst"))
+      .join(eb, Seq("src", "dst"), "left")
+      .na.fill(0L, Seq("depmicro"))
+      .select(col("src"), col("dst"),
+        scaled(col("depmicro"), n, k).as("edge_betweenness")))
+    val (vtx, vtxHandle) = Materialize.tableWithHandle(g.vertices.select("id")
+      .join(dep, Seq("id"), "left")
+      .na.fill(0L, Seq("dep"))
+      .select(col("id"), scaled(col("dep"), n, k).as("betweenness")))
+    SweepTables(vtx, edge, () => {
+      vtxHandle.unpersist(blocking = false)
+      edgeHandle.unpersist(blocking = false)
+    })
+  }
+
+  /** At or below the gate: the sweep's summed (per-index, per-arc)
+    * micro-longs, broadcast, → the two output tables as one-partition
+    * [[Gx.csrTable]]s, the rows the frame branch gives: a vertex-table
+    * row per id, and an edge-table row per `g.edges` row, canonical
+    * (lo, hi). Nothing is persisted; eviction drops the broadcast's
+    * executor copies. */
+  private def csrTables(g: Graph, sums: (Array[Long], Array[Long]),
+                        n: Long, k: Long): SweepTables = {
+    val bc = g.edges.sparkSession.sparkContext.broadcast(sums)
+    val vtx = Gx.csrTable(g, StructType(Seq(g.idField,
+        StructField("betweenness", DoubleType, nullable = true))),
+        g.vertexIds.value.length) { (c, ids) =>
+      val vdep = bc.value._1
+      ids.iterator.map { id =>
+        val i = c.indexOf(id)
+        InternalRow(id, scaled(if (i < 0) 0L else vdep(i), n, k))
+      }
+    }
+    val endsNullable = Seq("src", "dst").forall(g.edges.schema(_).nullable)
+    val edge = Gx.csrTable(g, StructType(Seq(
+        StructField("src", LongType, endsNullable),
+        StructField("dst", LongType, endsNullable),
+        StructField("edge_betweenness", DoubleType, nullable = true))),
+        sums._2.length / 2) { (c, _) =>
+      val adep = bc.value._2
+      // every edge u–v (u < v) is one arc u→v, a self-loop two arcs
+      // v→v; each parallel copy reads its edge's sum, which the sweep
+      // keeps on the first arc of the run
+      Iterator.range(0, c.size).flatMap { u =>
+        val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+        var a = c.offsets(u)
+        while (a < c.offsets(u + 1)) {
+          val v = c.nbrs(a)
+          var run = 1
+          while (a + run < c.offsets(u + 1) && c.nbrs(a + run) == v) run += 1
+          val copies = if (v > u) run else if (v == u) run / 2 else 0
+          if (copies > 0) {
+            val row = InternalRow(c.ids(u), c.ids(v), scaled(adep(a), n, k))
+            var r = 0
+            while (r < copies) { rows += row; r += 1 }
+          }
+          a += run
+        }
+        rows.iterator
+      }
+    }
+    SweepTables(vtx, edge, () => bc.unpersist(blocking = false))
   }
 
   /** Below the vertex gate: ONE source-parallel job over the graph's
@@ -166,10 +232,10 @@ object GxBetweenness {
     * sums), so both branches and the DuckDB oracle agree bit for bit.
     * Per-task state is O(|V|+|E|) dense arrays; the per-vertex and
     * per-arc sums leave each task as fixed-size arrays keyed by chunk,
-    * summed by one reduceByKey, and only then become rows. */
-  private def csrSweep(g: Graph, sources: Seq[Long]): (DataFrame, DataFrame) = {
-    val spark = g.edges.sparkSession
-    import spark.implicits._
+    * are summed by one reduceByKey, and come back to the driver as the
+    * dense (per-index, per-arc) sums: every arc's sum sits on its
+    * edge's first lo→hi arc. */
+  private def csrSweep(g: Graph, sources: Seq[Long]): (Array[Long], Array[Long]) = {
     val bc = g.csr
     // dense per-task accumulators leave a task in chunks of this many
     // longs, summed per chunk across tasks — never one tuple per arc
@@ -258,26 +324,14 @@ object GxBetweenness {
       var i = 0
       while (i < a.length) { a(i) += b(i); i += 1 }
       a
-    }, partials.getNumPartitions)
-    // both tables read the one shuffle: the second action reuses its
-    // map output instead of re-running the sweep
-    val dep = sums.filter(_._1 < vChunks).flatMap { case (key, part) =>
-      val c = bc.value
-      val base = key * chunk
-      part.iterator.zipWithIndex.collect {
-        case (d, i) if d != 0L => (c.ids(base + i), d)
-      }
+    }, partials.getNumPartitions).collect()
+    val vdep = new Array[Long](bc.value.size)
+    val adep = new Array[Long](bc.value.arcs)
+    sums.foreach { case (key, part) =>
+      if (key < vChunks) System.arraycopy(part, 0, vdep, key * chunk, part.length)
+      else System.arraycopy(part, 0, adep, (key - vChunks) * chunk, part.length)
     }
-    val eb = sums.filter(_._1 >= vChunks).flatMap { case (key, part) =>
-      val c = bc.value
-      val base = (key - vChunks) * chunk
-      part.iterator.zipWithIndex.collect {
-        case (m, i) if m != 0L =>
-          val a = base + i
-          (c.ids(c.arcSource(a)), c.ids(c.nbrs(a)), m)
-      }
-    }
-    (dep.toDF("id", "dep"), eb.toDF("src", "dst", "depmicro"))
+    (vdep, adep)
   }
 
   /** Above the vertex gate (the 100 TB branch): the Pregel sweep.

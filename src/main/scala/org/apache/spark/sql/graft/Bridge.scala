@@ -41,6 +41,31 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, leaf)
   }
 
+  /** A [[org.apache.spark.sql.execution.LogicalRDD]] leaf over `rows`,
+    * a one-partition RDD of `rowCount` rows of `schema`. The leaf
+    * declares its one partition (what `coalesce(1)` would say), so
+    * consumers group and aggregate it with no exchange, and it carries
+    * a size estimate of `rowCount` rows (Catalyst's per-row size), so
+    * joins still broadcast it the way they broadcast a cached leaf.
+    * Unlike a local relation, the rows never enter the plan: every
+    * consumer plan holds one scan node, whatever the row count. */
+  def singlePartitionLeaf(spark: org.apache.spark.sql.SparkSession,
+                          schema: org.apache.spark.sql.types.StructType,
+                          rowCount: Long,
+                          rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame = {
+    require(rows.getNumPartitions == 1, "one partition only")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
+    val size = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+      .EstimationUtils.getSizePerRow(output) * rowCount
+    val leaf = org.apache.spark.sql.execution.LogicalRDD(output, rows,
+      org.apache.spark.sql.catalyst.plans.physical.SinglePartition)(session,
+      Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
+        sizeInBytes = size, rowCount = Some(BigInt(rowCount)))))
+    org.apache.spark.sql.classic.Dataset.ofRows(session, leaf)
+  }
+
   /** `df`'s rows as Catalyst's internal rows, with no conversion to
     * external `Row`s: array columns stay `ArrayData`, so a kernel can
     * read them with the same accessors a native expression uses. */

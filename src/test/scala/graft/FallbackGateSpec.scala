@@ -236,9 +236,10 @@ class FallbackGateSpec extends AnyFunSuite {
       assert(base.nonEmpty && base.subsetOf(persisted()),
         "Gx.of(g) base was freed")
     }
-    // below the gate the triangle memo is the one table the triangle
-    // counts persist: no oriented edge, adjacency or intersection table
-    // (above it those three sit under the memo)
+    // below the gate the triangle table persists nothing: the counts
+    // are a broadcast array and the table a one-partition leaf over it;
+    // above it the oriented edge, adjacency and intersection tables sit
+    // under the memo
     def triangleTables(gate: Long): Seq[String] = withGate(gate) {
       val g = freshGraph()
       g.degrees
@@ -248,8 +249,47 @@ class FallbackGateSpec extends AnyFunSuite {
       added(before)
     }
     val small = triangleTables(Long.MaxValue)
-    assert(small.size == 1, s"expected only the triangle memo: $small")
+    assert(small.isEmpty, s"expected no persisted table: $small")
     val wide = triangleTables(0L)
     assert(wide.size == 4, s"expected the oriented tables and the memo: $wide")
+  }
+
+  test("degree, triangle and betweenness tables: rows and schemas equal across the gate") {
+    val small = withGate(Long.MaxValue)(GraphReplays.perVertexTables(freshGraph()))
+    val wide = withGate(0L)(GraphReplays.perVertexTables(freshGraph()))
+    assert(small._2 == wide._2, s"schemas diverge: ${small._2} vs ${wide._2}")
+    small._1.zip(wide._1).zipWithIndex.foreach { case ((a, b), i) =>
+      assert(a == b, s"table $i diverges")
+    }
+    val g = freshGraph()
+    assert(small._1.head.size == g.vertexCount, "a degree row per vertex")
+    assert(small._1(7).size == g.edges.count(), "an edge-betweenness row per edge")
+    assert(small._1(2).exists(!_.endsWith(",0]")), "no triangle in the graph")
+  }
+
+  test("below the gate: degree, triangle and betweenness tables persist nothing, within a job cap") {
+    import org.apache.spark.sql.functions.{max, sum}
+    val sc = spark.sparkContext
+    withGate(Long.MaxValue) {
+      val g = freshGraph()
+      g.vertexCount
+      val before = sc.getPersistentRDDs.keySet.toSet
+      // the id collect, the edge-list collect for the CSR, the action
+      val deg = jobsIn("csr-degrees")(g.degrees.agg(sum("degree")).head())
+      assert(deg <= 3, s"degrees: $deg jobs")
+      // the kernel job, the action; then the action alone
+      val tri = jobsIn("csr-triangles")(GraphBuilder.triangles(g).agg(sum("triangles")).head())
+      assert(tri <= 2, s"triangles: $tri jobs")
+      val again = jobsIn("csr-triangles-again")(g.transitivity.head())
+      assert(again == 1, s"transitivity on the memoized counts: $again jobs")
+      // the sweep's job and its reduce, then one action per table
+      val btw = jobsIn("csr-betweenness") {
+        GxBetweenness.run(g, numSources = 8).agg(max("betweenness")).head()
+        GxBetweenness.edgeRun(g, numSources = 8).agg(max("edge_betweenness")).head()
+      }
+      assert(btw <= 4, s"betweenness: $btw jobs")
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(added.isEmpty, s"persisted: $added")
+    }
   }
 }

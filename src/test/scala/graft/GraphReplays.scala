@@ -131,16 +131,37 @@ object GraphReplays {
   def md5Sources(ids: Seq[Long], k: Int, seed: Long = 42L): Seq[Long] =
     ids.sortBy(id => (md5Hex(s"$id:$seed"), id)).take(k)
 
+  /** Every table the degree, triangle and betweenness queries read —
+    * degrees, the degree histogram, the memoized triangle table, the
+    * clustering coefficients, average clustering, transitivity, vertex
+    * and edge betweenness from `numSources` sources — as sorted row
+    * strings (a double prints its shortest exact repr, so equal strings
+    * are equal bits; a duplicated row stays duplicated; an action that
+    * fails gives its exception's class), with every schema. */
+  def perVertexTables(g: Graph, numSources: Int = 8)
+      : (Seq[Seq[String]], Seq[org.apache.spark.sql.types.StructType]) = {
+    val dfs = Seq(g.degrees, g.degreeHistogram, GraphBuilder.triangles(g),
+      g.clusteringCoefficients, g.averageClustering, g.transitivity,
+      graft.graph.GxBetweenness.run(g, numSources),
+      graft.graph.GxBetweenness.edgeRun(g, numSources))
+    (dfs.map(df => scala.util.Try(df.collect().map(_.toString).toSeq.sorted)
+      .fold(e => Seq(e.getClass.getName), identity)), dfs.map(_.schema))
+  }
+
   /** Runs `f` on a fresh toy graph on each side of the vertex gate —
     * the broadcast-CSR kernels, then the Pregel branch — and returns
-    * both results. `isolated` adds vertices without an edge. Fresh
-    * frames per side: the graph memos key on them. */
-  def bothBranches[A](edges: Edges, isolated: Seq[Long] = Nil)(f: Graph => A): (A, A) = {
+    * both results. `isolated` adds vertices without an edge; `vertices`,
+    * when given, is the whole vertex table instead of the edge
+    * endpoints, so an edge may have an endpoint that is not a vertex.
+    * Fresh frames per side: the graph memos key on them. */
+  def bothBranches[A](edges: Edges, isolated: Seq[Long] = Nil,
+                      vertices: Option[Seq[Long]] = None)(f: Graph => A): (A, A) = {
     val spark = SparkTestSession.spark
     import spark.implicits._
     def mk(): Graph = {
       val e = edges.toDF("src", "dst")
-      val v = GraphBuilder.vertices(e).union(isolated.toDF("id"))
+      val v = vertices.map(_.toDF("id"))
+        .getOrElse(GraphBuilder.vertices(e)).union(isolated.toDF("id"))
       Graph(v, e)
     }
     val old = Graph.broadcastVertexGate

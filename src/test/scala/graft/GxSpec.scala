@@ -612,6 +612,70 @@ class GxSpec extends AnyFunSuite {
     assert(g.transitivity.as[Double].head() == 0.6)
   }
 
+  /** Degree, triangle and betweenness tables on both sides of the gate:
+    * rows and schemas equal; returns the CSR side's row strings. */
+  private def sameTables(edges: Seq[(Long, Long)], isolated: Seq[Long] = Nil,
+                         vertices: Option[Seq[Long]] = None): Seq[Seq[String]] = {
+    val (a, b) = bothBranches(edges, isolated, vertices)(GraphReplays.perVertexTables(_, 3))
+    assert(a._2 == b._2, s"schemas diverge: ${a._2} vs ${b._2}")
+    a._1.zip(b._1).zipWithIndex.foreach { case ((x, y), i) =>
+      assert(x == y, s"table $i diverges: $x vs $y")
+    }
+    a._1
+  }
+
+  test("toy graphs: degree, triangle and betweenness tables with isolated vertices") {
+    val t = sameTables(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)), isolated = Seq(8L, 9L))
+    assert(t.head == Seq("[1,2]", "[2,2]", "[3,3]", "[4,1]", "[8,0]", "[9,0]"))
+    assert(t(2) == Seq("[1,2,1]", "[2,2,1]", "[3,3,1]", "[4,1,0]", "[8,0,0]", "[9,0,0]"))
+  }
+
+  test("toy graphs: degree, triangle and betweenness tables over parallel and reversed edges") {
+    val t = sameTables(Seq((1L, 2L), (2L, 1L), (1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L)))
+    assert(t.head == Seq("[1,4]", "[2,4]", "[3,3]", "[4,1]"))
+    // one edge-table row per edge row, canonical (lo, hi)
+    assert(t(7).size == 6 && t(7).count(_.startsWith("[1,2,")) == 3)
+  }
+
+  test("toy graphs: degree, triangle and betweenness tables with self-loops") {
+    val t = sameTables(Seq((1L, 1L), (1L, 2L), (2L, 3L), (1L, 3L), (3L, 3L), (3L, 3L)))
+    assert(t.head == Seq("[1,4]", "[2,2]", "[3,6]"))
+    assert(t(7).count(_.startsWith("[3,3,")) == 2)
+  }
+
+  test("toy graphs: an edge endpoint outside the vertex table counts for the other end only") {
+    // the triangle 1-2-3 with 3 no vertex: the oriented stream drops the
+    // edges to 3, and the CSR kernel masks 3 out
+    val t = sameTables(Seq((1L, 2L), (2L, 3L), (1L, 3L)), vertices = Some(Seq(1L, 2L)))
+    assert(t.head == Seq("[1,2]", "[2,2]"))
+    assert(t(2) == Seq("[1,2,0]", "[2,2,0]"))
+    assert(t(7).size == 3)
+  }
+
+  test("toy graphs: degree, triangle and betweenness tables of an empty edge set") {
+    val t = sameTables(Nil, isolated = Seq(1L, 2L))
+    assert(t.head == Seq("[1,0]", "[2,0]") && t(7).isEmpty)
+    // no vertex at all: empty tables, same schemas
+    assert(sameTables(Nil).take(3).forall(_.isEmpty))
+  }
+
+  test("toy graphs: degree, triangle and betweenness tables with negative ids") {
+    val t = sameTables(Seq((-5L, 3L), (3L, -7L), (-7L, -5L), (-7L, 0L)), isolated = Seq(-100L))
+    assert(t.head == Seq("[-100,0]", "[-5,2]", "[-7,3]", "[0,1]", "[3,2]"))
+    assert(t(2).count(_.endsWith(",1]")) == 3)
+  }
+
+  test("betweenness sources: the driver-side md5 pick equals Spark's orderBy") {
+    val ids = g.vertices.as[Long].collect() ++
+      Array(-1L, -42L, 0L, 7L, 7L, Long.MinValue, Long.MaxValue)
+    for (seed <- Seq(42L, 1L, -3L); k <- Seq(0, 1, 8, ids.length + 1)) {
+      val want = ids.toSeq.toDF("id")
+        .orderBy(md5(concat_ws(":", $"id", lit(seed))), $"id")
+        .limit(k).as[Long].collect().toSeq
+      assert(graph.GxBetweenness.md5Sources(ids, k, seed) == want, s"seed $seed, k $k")
+    }
+  }
+
   test("neighbor features match a local replay in exact cents") {
     val prices = graft.Tables(spark, sf).part
       .select("p_partkey", "p_retailprice").as[(Long, Double)]
